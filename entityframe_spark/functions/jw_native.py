@@ -1,22 +1,27 @@
-"""Native (C, via ctypes) Jaro-Winkler batch kernel.
+"""Native (C, via ctypes) pair-scoring kernels: Levenshtein,
+Jaro-Winkler, hash-set intersect sizes, and LSH band hashes.
 
-Why this exists: the Arrow-batched numpy implementation in
-``similarity.jaro_winkler_batch`` is algorithmically fine, but this
-host's numpy pays ~1000x on every FRESH allocation (first-touch page
-zeroing; even ``np.arange`` of 200k elements takes ~0.3s), and the
-batch algorithm allocates O(positions) temporaries per batch —
-measured ~1.3k pairs/s/core, which made the scoring stage the q1
-bottleneck (37s of a 104s query). The C kernel is the textbook scalar
-Jaro-Winkler (bit-for-bit the semantics of ``similarity._jaro_winkler``,
-property-tested against it) with zero heap allocation per pair; it
-runs at >200k pairs/s/core.
+Why this exists: per-pair scoring in Python or numpy was the q1
+bottleneck. This host's numpy pays ~1000x on every FRESH allocation
+(first-touch page zeroing; even ``np.arange`` of 200k elements takes
+~0.3s), and a numpy Jaro-Winkler batch allocates O(positions)
+temporaries per batch — measured ~1.3k pairs/s/core, 37s of a 104s
+query. The C kernels are the textbook scalar algorithms (bit-for-bit
+the semantics of ``similarity._jaro_winkler`` and ``_lev_sim_py``,
+property-tested against them) with zero heap allocation per pair; they
+run at >200k pairs/s/core.
 
-Deployment: the ~60-line C source is compiled lazily, once per host,
-into a content-addressed ``.so`` under /tmp (atomic rename, so
+Pair scoring has ONE entry point: ``score_gather`` scores (li, ri)
+record-index pairs over a packed per-record feature table; both Arrow
+routes of ``pipeline.scoring.score_pairs`` call it. ``lev_jw_batch_*``
+score plain string pairs (kernel microbenchmarks, tests).
+
+Deployment: the C source is compiled lazily, once per host, into a
+content-addressed ``.so`` in a per-user cache dir (atomic rename, so
 concurrent Python workers race safely). On a multi-executor cluster
 each executor host compiles on first use — gcc/cc is assumed present
-(standard on cluster images); if compilation fails the caller falls
-back to the numpy batch path transparently.
+(standard on cluster images); if compilation fails ``score_gather``
+runs the pure-Python batch, with identical values, instead.
 """
 
 from __future__ import annotations
@@ -289,17 +294,6 @@ static double lev_one(const uint32_t* s1, int l1, const uint32_t* s2, int l2)
     return 1.0 - lev_dist(s1, l1, s2, l2) / (double)mx;
 }
 
-void jw_batch(const uint32_t* A, const uint32_t* B,
-              const int32_t* la, const int32_t* lb,
-              int64_t n, int32_t width, double prefix_weight,
-              double* out)
-{
-    for (int64_t r = 0; r < n; r++) {
-        out[r] = jw_one(A + r * (int64_t)width, la[r],
-                        B + r * (int64_t)width, lb[r], prefix_weight);
-    }
-}
-
 /* Combined scoring kernel: Levenshtein similarity over the full
    (<= width) prefixes and Jaro-Winkler over the first jw_max_len
    codepoints — one pass over the batch, two outputs, zero heap. */
@@ -329,10 +323,10 @@ void lev_jw_batch(const uint32_t* A, const uint32_t* B,
 
 #include <stdlib.h>
 
-/* ---- combined pair-scoring kernel (r6): set-intersect sizes +
-   lev + JW in one pass, so the whole per-pair feature computation
-   happens here instead of as JVM array_intersect (boxed OpenHashSet
-   per pair) + a separate string UDF. ---- */
+/* ---- pair-scoring kernel: set-intersect sizes + lev + JW in one
+   pass, so the whole per-pair feature computation happens here
+   instead of as JVM array_intersect (boxed OpenHashSet per pair) + a
+   separate string UDF. ---- */
 
 static int sorted64(const int64_t* a, int64_t n)
 {
@@ -376,45 +370,6 @@ static int64_t isect_size(const int64_t* a, int64_t na,
         }
     }
     return c;
-}
-
-static int64_t score_scratch[16384];
-
-/* All offset arrays are length n+1, absolute indices into the value
-   buffers (Arrow list layout). String offsets index utf-32 codepoint
-   buffers. Outputs: gram/token intersect sizes (int32) + lev/jw. */
-void score_batch(const int64_t* lgv, const int64_t* lgo,
-                 const int64_t* rgv, const int64_t* rgo,
-                 const int64_t* ltv, const int64_t* lto,
-                 const int64_t* rtv, const int64_t* rto,
-                 const uint32_t* A, const int64_t* ao,
-                 const uint32_t* B, const int64_t* bo,
-                 int64_t n, double prefix_weight,
-                 int32_t lev_max_len, int32_t jw_max_len,
-                 int32_t* gi_out, int32_t* ti_out,
-                 double* lev_out, double* jw_out)
-{
-    for (int64_t r = 0; r < n; r++) {
-        int64_t ng1 = lgo[r + 1] - lgo[r], ng2 = rgo[r + 1] - rgo[r];
-        int64_t nt1 = lto[r + 1] - lto[r], nt2 = rto[r + 1] - rto[r];
-        int64_t need = (ng1 + ng2 > nt1 + nt2 ? ng1 + ng2 : nt1 + nt2);
-        int64_t* scr = score_scratch;
-        int heap = need > 16384;
-        if (heap) scr = (int64_t*)malloc((size_t)need * 8);
-        gi_out[r] = (int32_t)isect_size(lgv + lgo[r], ng1, rgv + rgo[r], ng2, scr);
-        ti_out[r] = (int32_t)isect_size(ltv + lto[r], nt1, rtv + rto[r], nt2, scr);
-        if (heap) free(scr);
-        const uint32_t* s1 = A + ao[r];
-        const uint32_t* s2 = B + bo[r];
-        int l1 = (int)(ao[r + 1] - ao[r]);
-        int l2 = (int)(bo[r + 1] - bo[r]);
-        int v1 = l1 < lev_max_len ? l1 : lev_max_len;
-        int v2 = l2 < lev_max_len ? l2 : lev_max_len;
-        lev_out[r] = lev_one(s1, v1, s2, v2);
-        int j1 = l1 < jw_max_len ? l1 : jw_max_len;
-        int j2 = l2 < jw_max_len ? l2 : jw_max_len;
-        jw_out[r] = jw_one(s1, j1, s2, j2, prefix_weight);
-    }
 }
 
 /* ---- MinHash/LSH band-hash kernel (r6): shingle -> crc32 ->
@@ -497,19 +452,22 @@ void lsh_band_hashes(const uint32_t* txt, const int64_t* off,
     }
 }
 
-/* Gather variant: per-RECORD feature buffers (gram/token hash arrays,
-   prefix codepoints — offsets are n_rec+1) shared via broadcast; each
-   pair is (left_index, right_index) into them. The pair stream then
-   carries two int64s instead of ~KBs of duplicated per-pair arrays —
-   the guide-§8 move (decide with small rows; heavy bytes shipped once
-   per worker via the broadcast). Emits sizes too (the JVM cannot see
-   them without the arrays). */
+/* Per-RECORD feature buffers (gram/token hash arrays, prefix
+   codepoints — offsets are n_rec+1, Arrow list layout); each pair is
+   (left_index, right_index) into them. The gather route ships the
+   table once per worker as a broadcast, so the pair stream carries two
+   int64s instead of ~KBs of duplicated per-pair arrays; the join route
+   packs each batch's left rows then right rows into the same layout.
+   Emits sizes too (the JVM cannot see them without the arrays).
+   scratch: caller-owned, >= 2 x the longest gram/token array of any
+   record (isect_size sorts at most both sides of one pair into it). */
 void score_batch_gather(
     const int64_t* gvals, const int64_t* goff,
     const int64_t* tvals, const int64_t* toff,
     const uint32_t* pvals, const int64_t* poff,
     const int64_t* li, const int64_t* ri, int64_t n_pairs,
     double prefix_weight, int32_t lev_max_len, int32_t jw_max_len,
+    int64_t* scratch,
     int32_t* gi_out, int32_t* gl_out, int32_t* gr_out,
     int32_t* ti_out, int32_t* tl_out, int32_t* tr_out,
     double* lev_out, double* jw_out)
@@ -518,13 +476,8 @@ void score_batch_gather(
         int64_t a = li[r], b = ri[r];
         int64_t ng1 = goff[a + 1] - goff[a], ng2 = goff[b + 1] - goff[b];
         int64_t nt1 = toff[a + 1] - toff[a], nt2 = toff[b + 1] - toff[b];
-        int64_t need = (ng1 + ng2 > nt1 + nt2 ? ng1 + ng2 : nt1 + nt2);
-        int64_t* scr = score_scratch;
-        int heap = need > 16384;
-        if (heap) scr = (int64_t*)malloc((size_t)need * 8);
-        gi_out[r] = (int32_t)isect_size(gvals + goff[a], ng1, gvals + goff[b], ng2, scr);
-        ti_out[r] = (int32_t)isect_size(tvals + toff[a], nt1, tvals + toff[b], nt2, scr);
-        if (heap) free(scr);
+        gi_out[r] = (int32_t)isect_size(gvals + goff[a], ng1, gvals + goff[b], ng2, scratch);
+        ti_out[r] = (int32_t)isect_size(tvals + toff[a], nt1, tvals + toff[b], nt2, scratch);
         gl_out[r] = (int32_t)ng1; gr_out[r] = (int32_t)ng2;
         tl_out[r] = (int32_t)nt1; tr_out[r] = (int32_t)nt2;
         const uint32_t* s1 = pvals + poff[a];
@@ -615,17 +568,6 @@ def _compile() -> "ctypes.CDLL | None":
     if st.st_uid != os.getuid():
         raise RuntimeError(f"{so_path} not owned by current user; refusing to dlopen")
     lib = ctypes.CDLL(so_path)
-    lib.jw_batch.argtypes = [
-        ctypes.POINTER(ctypes.c_uint32),
-        ctypes.POINTER(ctypes.c_uint32),
-        ctypes.POINTER(ctypes.c_int32),
-        ctypes.POINTER(ctypes.c_int32),
-        ctypes.c_int64,
-        ctypes.c_int32,
-        ctypes.c_double,
-        ctypes.POINTER(ctypes.c_double),
-    ]
-    lib.jw_batch.restype = None
     lib.lev_jw_batch.argtypes = [
         ctypes.POINTER(ctypes.c_uint32),
         ctypes.POINTER(ctypes.c_uint32),
@@ -642,19 +584,11 @@ def _compile() -> "ctypes.CDLL | None":
     lib.lev_jw_batch.restype = None
     _i64 = ctypes.POINTER(ctypes.c_int64)
     _u32 = ctypes.POINTER(ctypes.c_uint32)
-    lib.score_batch.argtypes = [
-        _i64, _i64, _i64, _i64, _i64, _i64, _i64, _i64,
-        _u32, _i64, _u32, _i64,
-        ctypes.c_int64, ctypes.c_double, ctypes.c_int32, ctypes.c_int32,
-        ctypes.POINTER(ctypes.c_int32), ctypes.POINTER(ctypes.c_int32),
-        ctypes.POINTER(ctypes.c_double), ctypes.POINTER(ctypes.c_double),
-    ]
-    lib.score_batch.restype = None
     _i32o = ctypes.POINTER(ctypes.c_int32)
     lib.score_batch_gather.argtypes = [
         _i64, _i64, _i64, _i64, _u32, _i64,
         _i64, _i64, ctypes.c_int64,
-        ctypes.c_double, ctypes.c_int32, ctypes.c_int32,
+        ctypes.c_double, ctypes.c_int32, ctypes.c_int32, _i64,
         _i32o, _i32o, _i32o, _i32o, _i32o, _i32o,
         ctypes.POINTER(ctypes.c_double), ctypes.POINTER(ctypes.c_double),
     ]
@@ -757,10 +691,10 @@ def lev_jw_batch_fallback(
     prefix_weight: float = 0.1,
 ) -> tuple[np.ndarray, np.ndarray]:
     """Pure-Python batch (levenshtein_sim, jaro_winkler) with the same
-    truncation semantics as lev_jw_batch_native. Used inside the
-    scoring pandas UDF when a WORKER has no C compiler (ADVICE r3: the
-    driver-side native_available() check does not see compiler-less
-    executors) — correctness-identical, just slower."""
+    truncation semantics as lev_jw_batch_native. _score_gather_py uses
+    it when a WORKER has no C compiler (ADVICE r3: a driver-side
+    native_available() check does not see compiler-less executors) —
+    correctness-identical, just slower."""
     from entityframe_spark.functions.similarity import _jaro_winkler
 
     tune_allocator()
@@ -778,30 +712,6 @@ def lev_jw_batch_fallback(
     return lev, jw
 
 
-def jw_batch_native(
-    a_strs, b_strs, prefix_weight: float = 0.1, max_len: int = 128
-) -> np.ndarray:
-    """Batch Jaro-Winkler via the C kernel. Self-initialising (Spark
-    python workers import this module fresh; the .so is compiled or
-    cache-loaded on first call per process)."""
-    tune_allocator()
-    if not native_available():
-        raise RuntimeError(
-            "native JW kernel unavailable on this worker (no C compiler?); "
-            "use the numpy fallback path"
-        )
-    n = len(a_strs)
-    out = np.zeros(n, dtype=np.float64)
-    if n == 0:
-        return out
-    A, B, la, lb, width = _pack(a_strs, b_strs, max_len)
-    _lib.jw_batch(
-        _u32p(A), _u32p(B), _i32p(la), _i32p(lb),
-        n, width, float(prefix_weight), _f64p(out),
-    )
-    return out
-
-
 def lev_jw_batch_native(
     a_strs,
     b_strs,
@@ -811,12 +721,13 @@ def lev_jw_batch_native(
 ) -> tuple[np.ndarray, np.ndarray]:
     """Batch (levenshtein_sim, jaro_winkler) in ONE C pass: lev over
     the lev_max_len prefix, JW over the jw_max_len prefix.
-    Self-initialising per process, like jw_batch_native."""
+    Self-initialising: Spark python workers import this module fresh;
+    the .so is compiled or cache-loaded on first call per process."""
     tune_allocator()
     if not native_available():
         raise RuntimeError(
             "native lev/JW kernel unavailable on this worker (no C "
-            "compiler?); use the JVM levenshtein + numpy JW fallback"
+            "compiler?); use lev_jw_batch_fallback"
         )
     n = len(a_strs)
     lev = np.zeros(n, dtype=np.float64)
@@ -869,67 +780,7 @@ def lsh_band_hashes_native(
     return out
 
 
-def _c64(vals: np.ndarray, off: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
-    """Contiguous int64 (values, offsets) pair for the C kernel."""
-    return (
-        np.ascontiguousarray(vals, dtype=np.int64),
-        np.ascontiguousarray(off, dtype=np.int64),
-    )
-
-
-def score_batch_native(
-    lg_vals, lg_off, rg_vals, rg_off,
-    lt_vals, lt_off, rt_vals, rt_off,
-    a_strs, b_strs,
-    lev_max_len: int = 256,
-    jw_max_len: int = 128,
-    prefix_weight: float = 0.1,
-):
-    """One C pass over a pair batch: gram/token intersect sizes
-    (distinct semantics — exact parity with size(array_intersect)),
-    normalised Levenshtein over the lev prefix, Jaro-Winkler over the
-    jw prefix. Array inputs are Arrow list layout: int64 value buffers
-    plus n+1 absolute offsets. Returns (gi, ti, lev, jw)."""
-    tune_allocator()
-    if not native_available():
-        raise RuntimeError(
-            "native scoring kernel unavailable on this worker (no C "
-            "compiler?); use the pure-Python scoring fallback"
-        )
-    n = len(a_strs)
-    gi = np.zeros(n, dtype=np.int32)
-    ti = np.zeros(n, dtype=np.int32)
-    lev = np.zeros(n, dtype=np.float64)
-    jw = np.zeros(n, dtype=np.float64)
-    if n == 0:
-        return gi, ti, lev, jw
-    _empty = np.zeros(1, np.int64)  # valid pointer for empty value buffers
-
-    def _nz(a: np.ndarray) -> np.ndarray:
-        return a if a.size else _empty
-
-    lgv, lgo = _c64(lg_vals, lg_off)
-    rgv, rgo = _c64(rg_vals, rg_off)
-    ltv, lto = _c64(lt_vals, lt_off)
-    rtv, rto = _c64(rt_vals, rt_off)
-    lgv, rgv, ltv, rtv = _nz(lgv), _nz(rgv), _nz(ltv), _nz(rtv)
-    A, ao = _pack_offsets(a_strs, max(lev_max_len, jw_max_len))
-    B, bo = _pack_offsets(b_strs, max(lev_max_len, jw_max_len))
-    _lib.score_batch(
-        _i64p(lgv), _i64p(lgo),
-        _i64p(rgv), _i64p(rgo),
-        _i64p(ltv), _i64p(lto),
-        _i64p(rtv), _i64p(rto),
-        _u32p(A), _i64p(ao), _u32p(B), _i64p(bo),
-        n, float(prefix_weight), int(lev_max_len), int(jw_max_len),
-        ctypes.cast(gi.ctypes.data, ctypes.POINTER(ctypes.c_int32)),
-        ctypes.cast(ti.ctypes.data, ctypes.POINTER(ctypes.c_int32)),
-        _f64p(lev), _f64p(jw),
-    )
-    return gi, ti, lev, jw
-
-
-def score_batch_gather_native(
+def score_gather(
     feat: tuple,
     li: np.ndarray,
     ri: np.ndarray,
@@ -937,36 +788,91 @@ def score_batch_gather_native(
     jw_max_len: int = 128,
     prefix_weight: float = 0.1,
 ):
-    """Gather-variant of score_batch: ``feat`` is the packed per-record
-    feature table (gvals, goff, tvals, toff, pvals, poff) — int64 hash
-    buffers + uint32 prefix codepoints with n_rec+1 offsets — and
-    li/ri are per-pair RECORD INDICES into it. Returns
-    (gi, gl, gr, ti, tl, tr, lev, jw)."""
+    """Score pairs of records of a packed feature table. ``feat`` is
+    (gvals, goff, tvals, toff, pvals, poff): int64 gram/token hash
+    buffers and uint32 prefix codepoints, each with n_rec+1 absolute
+    offsets (Arrow list layout); li/ri are per-pair RECORD INDICES into
+    it. Intersect sizes have distinct-value semantics (exact parity
+    with size(array_intersect)); lev is over the lev_max_len prefix, JW
+    over the jw_max_len prefix. Returns (gi, gl, gr, ti, tl, tr, lev,
+    jw): int32 intersect and per-side sizes, float64 similarities.
+
+    Runs the C kernel when it loads in this process, else
+    _score_gather_py with identical values: a cluster can have
+    compiler-less executors even when the driver compiled fine."""
     tune_allocator()
-    if not native_available():
-        raise RuntimeError(
-            "native scoring kernel unavailable on this worker (no C "
-            "compiler?); use the pure-Python scoring fallback"
-        )
-    gvals, goff, tvals, toff, pvals, poff = feat
-    n = len(li)
     li = np.ascontiguousarray(li, dtype=np.int64)
     ri = np.ascontiguousarray(ri, dtype=np.int64)
+    gvals, goff, tvals, toff, pvals, poff = feat
+    n = len(li)
+    if n and not (
+        0 <= min(li.min(), ri.min()) <= max(li.max(), ri.max()) < len(goff) - 1
+    ):
+        # the kernel would read outside the table and crash the worker
+        raise IndexError("score_gather: record index outside the feature table")
+    if not native_available():
+        return _score_gather_py(
+            feat, li, ri, lev_max_len, jw_max_len, prefix_weight
+        )
     out_i = [np.zeros(n, dtype=np.int32) for _ in range(6)]
     lev = np.zeros(n, dtype=np.float64)
     jw = np.zeros(n, dtype=np.float64)
     if n == 0:
         return (*out_i, lev, jw)
-    ptrs = [
-        ctypes.cast(a.ctypes.data, ctypes.POINTER(ctypes.c_int32)) for a in out_i
-    ]
-    gi, gl, gr, ti, tl, tr = out_i
+    # isect_size sorts at most both sides of one pair into scratch
+    widest = max(np.diff(goff).max(initial=0), np.diff(toff).max(initial=0))
+    scratch = np.empty(2 * int(widest) + 1, dtype=np.int64)
     _lib.score_batch_gather(
         _i64p(gvals), _i64p(goff), _i64p(tvals), _i64p(toff),
         _u32p(pvals), _i64p(poff),
         _i64p(li), _i64p(ri), n,
         float(prefix_weight), int(lev_max_len), int(jw_max_len),
-        ptrs[0], ptrs[1], ptrs[2], ptrs[3], ptrs[4], ptrs[5],
+        _i64p(scratch),
+        *(_i32p(a) for a in out_i),
         _f64p(lev), _f64p(jw),
     )
-    return gi, gl, gr, ti, tl, tr, lev, jw
+    return (*out_i, lev, jw)
+
+
+def _score_gather_py(
+    feat: tuple,
+    li: np.ndarray,
+    ri: np.ndarray,
+    lev_max_len: int = 256,
+    jw_max_len: int = 128,
+    prefix_weight: float = 0.1,
+):
+    """Pure-Python twin of the C score_batch_gather (same inputs,
+    outputs and values) for workers without a C compiler."""
+    gvals, goff, tvals, toff, pvals, poff = feat
+    n = len(li)
+
+    def sizes(off):
+        return (
+            (off[li + 1] - off[li]).astype(np.int32),
+            (off[ri + 1] - off[ri]).astype(np.int32),
+        )
+
+    def isect(vals, off):
+        return np.fromiter(
+            (
+                len(
+                    set(vals[off[a]:off[a + 1]].tolist())
+                    & set(vals[off[c]:off[c + 1]].tolist())
+                )
+                for a, c in zip(li, ri)
+            ),
+            np.int32,
+            count=n,
+        )
+
+    def text(i):
+        return pvals[poff[i]:poff[i + 1]].tobytes().decode("utf-32-le")
+
+    gl, gr = sizes(goff)
+    tl, tr = sizes(toff)
+    lev, jw = lev_jw_batch_fallback(
+        [text(a) for a in li], [text(c) for c in ri],
+        lev_max_len, jw_max_len, prefix_weight,
+    )
+    return isect(gvals, goff), gl, gr, isect(tvals, toff), tl, tr, lev, jw

@@ -13,9 +13,12 @@ cost on ~500k pairs:
    prefix. Raw per-pair payload was ~26KB/row (13GB for 515k pairs) —
    IO-bound, thread-scaling-hostile; hashed payload is ~5-8x smaller
    and long-array intersects beat string intersects.
-3. Jaro-Winkler runs on a 128-char prefix in an Arrow-batched pandas
-   UDF; Levenshtein (JVM built-in) on the 256-char prefix — the
-   O(len^2) DP at 512 chars was 4x the whole rest (measured).
+3. Every per-pair feature comes from ONE C kernel call per Arrow
+   batch (functions/jw_native.py score_gather): hash-set intersect
+   sizes, Levenshtein on the 256-char prefix, Jaro-Winkler on its
+   first 128 chars — the O(len^2) DP at 512 chars was 4x the whole
+   rest (measured). Without a C compiler the same call runs a
+   pure-Python batch with identical values.
 
 Features (all in [0,1]): bigram containment/jaccard (order-aware;
 containment is what separates truncated variants), token jaccard,
@@ -27,11 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from entityframe_spark.functions.similarity import (
-    TOKEN_SPLIT,
-    jaro_winkler_sim,
-    levenshtein_sim,
-)
+from entityframe_spark.functions.similarity import TOKEN_SPLIT
 
 DEFAULT_WEIGHTS = {
     "bigram_containment": 0.35,
@@ -84,58 +83,43 @@ def attach_pair_texts(
     broadcast_threshold: int = 500_000,
     features_count: int | None = None,
 ) -> DataFrame:
-    """Two equi-joins pulling both sides' prefix + hashed arrays onto
-    each pair. ``features`` must carry FEATURE_COLS (from
-    prepare_record_features); derived here if missing (small-input
-    convenience path).
+    """Make both sides' scoring features reachable from each pair, on
+    one of two routes that score_pairs tells apart. ``features`` must
+    carry FEATURE_COLS (from prepare_record_features); derived here if
+    missing (small-input convenience path).
 
-    Join strategy (the scale decision that dominates scoring wall):
-    the feature rows are ~2-4 KB each (two hashed-set arrays + a
-    256-char prefix), so a shuffle join moves pairs x 2 x that — 8 GB
-    for 2.4M pairs, an IO cost that does NOT scale with cores
-    (measured: the single biggest drag on N->4N scaling efficiency).
-    When the feature table is dimension-sized (< broadcast_threshold
-    rows) it is BROADCAST instead: zero pair shuffle, the join runs
-    map-side over the pairs' existing partitions. Beyond the
-    threshold (the 100 TB path) callers should bucket both sides on
-    record_id and let sort-merge join co-locate; pass
-    broadcast_threshold=0 to force the shuffle join.
+    Gather route (feature table < broadcast_threshold rows, guide §8):
+    the table is collected ONCE, packed into flat buffers and shipped
+    to workers as a Spark broadcast; score_pairs looks both records up
+    by index. The pair stream then carries two int64s + block_key
+    instead of ~2.7 KB of duplicated arrays per pair (measured: 1.4 GB
+    of Arrow traffic for 515k pairs over 1.5k records). The handle
+    rides on the returned DataFrame object as ``_ef_pair_features``;
+    any other consumer still sees a valid (narrow) pair frame.
+
+    Join route (larger tables, or broadcast_threshold=0): two
+    equi-joins put both sides' prefix + hashed arrays on each pair row.
+    Feature rows are ~2-4 KB each, so a shuffle join moves pairs x 2 x
+    that — 8 GB for 2.4M pairs, an IO cost that does NOT scale with
+    cores. At that size (the 100 TB path) callers should bucket both
+    sides on record_id and let sort-merge join co-locate.
 
     ``features_count``: caller-supplied row count of ``features``.
     When the caller already knows it (it usually does — the collapse
     stage counts its output), the capped limit().count() probe job is
     skipped entirely; the probe is only the no-hint fallback (VERDICT
     r3: one extra Spark job in the hot path)."""
-    from entityframe_spark.functions import jw_native
-
     if "toks_h" not in features.columns:
         features = prepare_record_features(features).localCheckpoint(eager=False)
     sel = features.select(*FEATURE_COLS)
-    if broadcast_threshold:
-        small = (
-            features_count < broadcast_threshold
-            if features_count is not None
-            else sel.limit(broadcast_threshold).count() < broadcast_threshold
-        )
-        if small and jw_native.native_available():
-            # r6 (guide §8): when the feature table is dimension-sized,
-            # do not attach the heavy per-record arrays to every pair
-            # row at all — collect the table ONCE, ship it to workers
-            # as a Spark broadcast, and let score_pairs' gather kernel
-            # look both sides up by record index. The pair stream then
-            # carries two int64s + block_key instead of ~2.7 KB of
-            # duplicated arrays per pair (measured: 1.4 GB of Arrow
-            # traffic for 515k pairs over 1.5k records). The handle
-            # rides on the returned DataFrame object; score_pairs
-            # consumes it, and any other consumer still sees a valid
-            # (narrow) pair frame. Falls through to the broadcast JOIN
-            # when no C kernel is available (the JVM fallback route
-            # needs the arrays as columns).
-            out = pairs.select("*")  # fresh DF object: never mutate the caller's
-            out._ef_pair_features = _collect_features_broadcast(sel)
-            return out
-        if small:
-            sel = F.broadcast(sel)
+    if broadcast_threshold and (
+        features_count < broadcast_threshold
+        if features_count is not None
+        else sel.limit(broadcast_threshold).count() < broadcast_threshold
+    ):
+        out = pairs.select("*")  # fresh DF object: never mutate the caller's
+        out._ef_pair_features = _collect_features_broadcast(sel)
+        return out
     left = sel.select(
         F.col("record_id").alias("left_id"),
         F.col("prefix").alias("left_text"),
@@ -151,6 +135,33 @@ def attach_pair_texts(
     return pairs.join(left, "left_id").join(right, "right_id")
 
 
+def _list_buffers(arr):
+    """Arrow list array (or chunked array) -> contiguous (int64 values,
+    int64 offsets[n+1]) with offsets absolute into the values — the
+    layout the C scoring kernel reads. Null entries (not produced by
+    the pipeline, but contract-safe) become empty lists."""
+    import numpy as np
+    import pyarrow as pa
+
+    if isinstance(arr, pa.ChunkedArray):
+        arr = arr.combine_chunks()
+    if arr.null_count:
+        py = arr.to_pylist()
+        lens = np.fromiter(
+            (0 if v is None else len(v) for v in py), np.int64, count=len(py)
+        )
+        off = np.zeros(len(py) + 1, np.int64)
+        np.cumsum(lens, out=off[1:])
+        vals = np.fromiter((x for v in py if v for x in v), np.int64)
+    else:
+        off = arr.offsets.to_numpy(zero_copy_only=False)
+        vals = arr.values.to_numpy(zero_copy_only=False)
+    return (
+        np.ascontiguousarray(vals, dtype=np.int64),
+        np.ascontiguousarray(off, dtype=np.int64),
+    )
+
+
 _prev_feature_broadcasts: list = []  # bounded: previous handle released
 
 
@@ -163,36 +174,13 @@ def _collect_features_broadcast(sel: DataFrame):
     pvals, poff)."""
     import numpy as np
 
-    tbl = sel.toArrow().combine_chunks().sort_by("record_id")
-    ids = tbl.column("record_id").to_numpy(zero_copy_only=False).astype(np.int64)
-
-    def flat(name):
-        arr = tbl.column(name)
-        if arr.num_chunks == 1:
-            arr = arr.chunk(0)
-        else:  # empty table
-            import pyarrow as pa
-
-            arr = pa.array([], type=arr.type)
-        if arr.null_count:
-            py = arr.to_pylist()
-            lens = np.fromiter(
-                (0 if v is None else len(v) for v in py), np.int64, count=len(py)
-            )
-            off = np.zeros(len(py) + 1, np.int64)
-            np.cumsum(lens, out=off[1:])
-            vals = np.fromiter((x for v in py if v for x in v), np.int64)
-        else:
-            off = arr.offsets.to_numpy(zero_copy_only=False).astype(np.int64)
-            vals = arr.values.to_numpy(zero_copy_only=False).astype(np.int64)
-        return np.ascontiguousarray(vals), np.ascontiguousarray(off)
-
-    gvals, goff = flat("grams_h")
-    tvals, toff = flat("toks_h")
     from entityframe_spark.functions.jw_native import _pack_offsets
 
-    prefixes = tbl.column("prefix").to_pylist()
-    pvals, poff = _pack_offsets(prefixes, PREFIX_LEN)
+    tbl = sel.toArrow().combine_chunks().sort_by("record_id")
+    ids = tbl.column("record_id").to_numpy(zero_copy_only=False).astype(np.int64)
+    gvals, goff = _list_buffers(tbl.column("grams_h"))
+    tvals, toff = _list_buffers(tbl.column("toks_h"))
+    pvals, poff = _pack_offsets(tbl.column("prefix").to_pylist(), PREFIX_LEN)
     sc = sel.sparkSession.sparkContext
     while _prev_feature_broadcasts:
         try:
@@ -204,123 +192,137 @@ def _collect_features_broadcast(sel: DataFrame):
     return bc
 
 
+_SCORES_SCHEMA = (
+    "left_id long, right_id long, block_key string, "
+    "_gi int, _gl int, _gr int, _ti int, _tl int, _tr int, "
+    "_lev double, _jw double"
+)
+
+
+def _scores_batch(b, scores):
+    """Output batch of both Arrow routes: the pair key columns of input
+    batch ``b`` plus score_gather's eight arrays."""
+    import pyarrow as pa
+
+    types = [pa.int32()] * 6 + [pa.float64()] * 2
+    return pa.RecordBatch.from_arrays(
+        [b.column("left_id"), b.column("right_id"), b.column("block_key")]
+        + [pa.array(a, t) for a, t in zip(scores, types)],
+        names=[
+            "left_id", "right_id", "block_key",
+            "_gi", "_gl", "_gr", "_ti", "_tl", "_tr", "_lev", "_jw",
+        ],
+    )
+
+
 def _score_pairs_gather(
     pairs: DataFrame, bc, lev_max_len: int, jw_max_len: int
 ) -> DataFrame:
     """Gather route (guide §8): the pair stream carries only
     (left_id, right_id, block_key); workers look both records up in
-    the broadcast feature table and the C gather kernel computes every
-    feature. Pairs whose ids are absent from the table are dropped —
-    the same semantics as the join route's inner joins."""
+    the broadcast feature table and score them with score_gather.
+    Pairs whose ids are absent from the table are dropped — the same
+    semantics as the join route's inner joins (an empty table drops
+    every batch)."""
     lev_cap, jw_cap = int(lev_max_len), int(jw_max_len)
-    src = pairs.select("left_id", "right_id", "block_key")
-    out_schema = (
-        "left_id long, right_id long, block_key string, "
-        "_gi int, _gl int, _gr int, _ti int, _tl int, _tr int, "
-        "_lev double, _jw double"
+
+    def run(batches):
+        import numpy as np
+
+        from entityframe_spark.functions import jw_native
+
+        ids, *feat = bc.value
+        for b in batches:
+            if b.num_rows == 0 or len(ids) == 0:
+                continue
+            lid = b.column("left_id").to_numpy(zero_copy_only=False)
+            rid = b.column("right_id").to_numpy(zero_copy_only=False)
+            li = np.minimum(np.searchsorted(ids, lid), len(ids) - 1)
+            ri = np.minimum(np.searchsorted(ids, rid), len(ids) - 1)
+            ok = (ids[li] == lid) & (ids[ri] == rid)
+            if not ok.all():
+                b, li, ri = b.filter(ok), li[ok], ri[ok]
+                if b.num_rows == 0:
+                    continue
+            yield _scores_batch(
+                b, jw_native.score_gather(feat, li, ri, lev_cap, jw_cap)
+            )
+
+    return pairs.select("left_id", "right_id", "block_key").mapInArrow(
+        run, _SCORES_SCHEMA
+    )
+
+
+def _score_pairs_join(
+    src_df: DataFrame, lev_max_len: int, jw_max_len: int
+) -> DataFrame:
+    """Join route: the pair rows carry both sides' arrays and prefixes
+    (attach_pair_texts' joins), consumed INSIDE one mapInArrow stage so
+    the output rows stay narrow — the plan is scan -> joins ->
+    MapInArrow -> project, no barrier Exchange. Each batch is packed
+    into the same per-record layout as the gather route's broadcast
+    table (left rows, then right rows: li = i, ri = n + i), so both
+    routes run the same score_gather call and the same values.
+
+    Why not JVM array_intersect (r6, guide §4.2 / §1.2): it builds an
+    OpenHashSet of BOXED values per pair, measured 2.3s for 515k pairs
+    (~75% of the JVM stage), and needed a repartition barrier so the
+    string UDF would not see the wide array columns as pass-through."""
+    pack_len = max(int(lev_max_len), int(jw_max_len))
+    lev_cap, jw_cap = int(lev_max_len), int(jw_max_len)
+    src = src_df.select(
+        "left_id",
+        "right_id",
+        "block_key",
+        "lgrams",
+        "rgrams",
+        "ltoks",
+        "rtoks",
+        F.substring(F.col("left_text"), 1, pack_len).alias("_lp"),
+        F.substring(F.col("right_text"), 1, pack_len).alias("_rp"),
     )
 
     def run(batches):
         import numpy as np
-        import pyarrow as pa
 
         from entityframe_spark.functions import jw_native
 
-        jw_native.tune_allocator()
-        ids, gvals, goff, tvals, toff, pvals, poff = bc.value
-        feat = (gvals, goff, tvals, toff, pvals, poff)
+        def both(b, left, right):
+            # one record table: left rows, then right rows. Joined in
+            # numpy, not pa.concat_arrays: Arrow's allocator bypasses
+            # the tuned glibc heap, so each batch faulted fresh pages
+            # (measured ~4x slower on 60k linkage pairs)
+            lv, lo = _list_buffers(b.column(left))
+            rv, ro = _list_buffers(b.column(right))
+            lv, rv = lv[lo[0]:lo[-1]], rv[ro[0]:ro[-1]]
+            return (
+                np.concatenate([lv, rv]),
+                np.concatenate([lo - lo[0], ro[1:] - ro[0] + len(lv)]),
+            )
+
         for b in batches:
             n = b.num_rows
             if n == 0:
                 continue
-            idx = {nm: i for i, nm in enumerate(b.schema.names)}
-            lid = b.column(idx["left_id"]).to_numpy(zero_copy_only=False)
-            rid = b.column(idx["right_id"]).to_numpy(zero_copy_only=False)
-            li = np.searchsorted(ids, lid)
-            ri = np.searchsorted(ids, rid)
-            np.minimum(li, len(ids) - 1, out=li)
-            np.minimum(ri, len(ids) - 1, out=ri)
-            ok = (ids[li] == lid) & (ids[ri] == rid)
-            if not ok.all():
-                keep = pa.array(ok)
-                b = b.filter(keep)
-                li, ri = li[ok], ri[ok]
-                n = b.num_rows
-                if n == 0:
-                    continue
-            if jw_native.native_available():
-                gi, gl, gr, ti, tl, tr, lev, jw = (
-                    jw_native.score_batch_gather_native(
-                        feat, li, ri, lev_cap, jw_cap
-                    )
-                )
-            else:
-                # heterogeneous-cluster fallback: same semantics in
-                # pure Python/numpy
-                gl = (goff[li + 1] - goff[li]).astype(np.int32)
-                gr = (goff[ri + 1] - goff[ri]).astype(np.int32)
-                tl = (toff[li + 1] - toff[li]).astype(np.int32)
-                tr = (toff[ri + 1] - toff[ri]).astype(np.int32)
-                gi = np.fromiter(
-                    (
-                        len(
-                            set(gvals[goff[a]:goff[a + 1]])
-                            & set(gvals[goff[c]:goff[c + 1]])
-                        )
-                        for a, c in zip(li, ri)
-                    ),
-                    np.int32,
-                    count=n,
-                )
-                ti = np.fromiter(
-                    (
-                        len(
-                            set(tvals[toff[a]:toff[a + 1]])
-                            & set(tvals[toff[c]:toff[c + 1]])
-                        )
-                        for a, c in zip(li, ri)
-                    ),
-                    np.int32,
-                    count=n,
-                )
-
-                def _s(i):
-                    cp = pvals[poff[i]:poff[i + 1]]
-                    return cp.tobytes().decode("utf-32-le")
-
-                lp = [_s(a) for a in li]
-                rp = [_s(c) for c in ri]
-                lev, jw = jw_native.lev_jw_batch_fallback(
-                    lp, rp, lev_cap, jw_cap
-                )
-            yield pa.RecordBatch.from_arrays(
-                [
-                    b.column(idx["left_id"]),
-                    b.column(idx["right_id"]),
-                    b.column(idx["block_key"]),
-                    pa.array(gi, pa.int32()),
-                    pa.array(gl, pa.int32()),
-                    pa.array(gr, pa.int32()),
-                    pa.array(ti, pa.int32()),
-                    pa.array(tl, pa.int32()),
-                    pa.array(tr, pa.int32()),
-                    pa.array(lev, pa.float64()),
-                    pa.array(jw, pa.float64()),
-                ],
-                names=[
-                    "left_id", "right_id", "block_key",
-                    "_gi", "_gl", "_gr", "_ti", "_tl", "_tr",
-                    "_lev", "_jw",
-                ],
+            feat = (
+                *both(b, "lgrams", "rgrams"),
+                *both(b, "ltoks", "rtoks"),
+                *jw_native._pack_offsets(
+                    b.column("_lp").to_pylist() + b.column("_rp").to_pylist(),
+                    pack_len,
+                ),
+            )
+            li = np.arange(n, dtype=np.int64)
+            yield _scores_batch(
+                b, jw_native.score_gather(feat, li, li + n, lev_cap, jw_cap)
             )
 
-    return src.mapInArrow(run, out_schema).select(*_feature_projection())
+    return src.mapInArrow(run, _SCORES_SCHEMA)
 
 
 def _feature_projection():
-    """Shared final projection: identical expressions (and doubles) on
-    both Arrow routes and structurally the same ones the JVM route
-    uses."""
+    """Final projection shared by both routes: the feature divisions
+    and rounding stay in the JVM, so both produce identical doubles."""
     gi, gl, gr = F.col("_gi"), F.col("_gl"), F.col("_gr")
     ti, tl, tr = F.col("_ti"), F.col("_tl"), F.col("_tr")
     return [
@@ -342,238 +344,34 @@ def _feature_projection():
     ]
 
 
-def _jaccard(a, b):
-    inter = F.size(F.array_intersect(a, b))
-    union = F.size(F.array_union(a, b))
-    return F.when(union == 0, F.lit(1.0)).otherwise(inter / union)
-
-
-def _containment(a, b):
-    inter = F.size(F.array_intersect(a, b))
-    denom = F.least(F.size(a), F.size(b))
-    return F.when(denom == 0, F.lit(1.0)).otherwise(inter / denom)
-
-
-def _score_pairs_arrow(
-    src_df: DataFrame, lev_max_len: int, jw_max_len: int
-) -> DataFrame:
-    """r6 fast path: the ENTIRE per-pair feature computation — gram and
-    token intersect sizes, Levenshtein, Jaro-Winkler — in ONE
-    mapInArrow stage backed by the C scoring kernel
-    (functions/jw_native.py score_batch).
-
-    Why (guide §4.2 / §1.2): the previous plan computed intersect sizes
-    with JVM array_intersect — an OpenHashSet of BOXED values built per
-    pair, measured 2.3s for 515k pairs (~75% of the JVM stage) — then
-    paid a repartition barrier so the string UDF would not see the wide
-    array columns as pass-through. Moving the intersects into the same
-    native kernel as lev/JW (linear merge over pre-sorted hash arrays)
-    removes both the boxed per-pair hashing AND the barrier Exchange:
-    the plan is now scan -> broadcast joins -> MapInArrow -> project,
-    one stage, no shuffle. The arrays are consumed INSIDE the Arrow
-    stage (not passed through), so the output rows stay narrow.
-
-    Feature values are bit-identical to the JVM path: intersect size
-    has distinct-value semantics exactly like size(array_intersect),
-    lev/JW are the same kernels, and the final feature expressions
-    (divisions + round) stay in the JVM so both routes share them.
-    Workers without a C compiler fall back to a pure-Python batch with
-    the same semantics (heterogeneous-cluster contract, ADVICE r3)."""
-    pack_len = max(int(lev_max_len), int(jw_max_len))
-    lev_cap, jw_cap = int(lev_max_len), int(jw_max_len)
-    src = src_df.select(
-        "left_id",
-        "right_id",
-        "block_key",
-        "lgrams",
-        "rgrams",
-        "ltoks",
-        "rtoks",
-        F.substring(F.col("left_text"), 1, pack_len).alias("_lp"),
-        F.substring(F.col("right_text"), 1, pack_len).alias("_rp"),
-    )
-    out_schema = (
-        "left_id long, right_id long, block_key string, "
-        "_gi int, _gl int, _gr int, _ti int, _tl int, _tr int, "
-        "_lev double, _jw double"
-    )
-
-    def run(batches):
-        import numpy as np
-        import pyarrow as pa
-
-        from entityframe_spark.functions import jw_native
-
-        jw_native.tune_allocator()
-
-        def list_np(arr):
-            """Arrow ListArray -> (int64 values, int64 offsets[n+1],
-            absolute). Null entries (not produced by the pipeline, but
-            contract-safe) become empty lists."""
-            if arr.null_count:
-                py = arr.to_pylist()
-                lens = np.fromiter(
-                    (0 if v is None else len(v) for v in py),
-                    np.int64,
-                    count=len(py),
-                )
-                off = np.zeros(len(py) + 1, np.int64)
-                np.cumsum(lens, out=off[1:])
-                vals = np.fromiter(
-                    (x for v in py if v for x in v), np.int64
-                )
-                return vals, off
-            off = arr.offsets.to_numpy(zero_copy_only=False).astype(np.int64)
-            vals = arr.values.to_numpy(zero_copy_only=False)
-            return vals, off
-
-        for b in batches:
-            n = b.num_rows
-            if n == 0:
-                continue
-            idx = {nm: i for i, nm in enumerate(b.schema.names)}
-            lgv, lgo = list_np(b.column(idx["lgrams"]))
-            rgv, rgo = list_np(b.column(idx["rgrams"]))
-            ltv, lto = list_np(b.column(idx["ltoks"]))
-            rtv, rto = list_np(b.column(idx["rtoks"]))
-            lp = b.column(idx["_lp"]).to_pylist()
-            rp = b.column(idx["_rp"]).to_pylist()
-            if jw_native.native_available():
-                gi, ti, lev, jw = jw_native.score_batch_native(
-                    lgv, lgo, rgv, rgo, ltv, lto, rtv, rto,
-                    lp, rp, lev_cap, jw_cap,
-                )
-            else:
-                # pure-Python batch, same semantics (distinct-value
-                # intersects; fallback lev/JW kernels)
-                lev, jw = jw_native.lev_jw_batch_fallback(
-                    lp, rp, lev_cap, jw_cap
-                )
-                gi = np.fromiter(
-                    (
-                        len(
-                            set(lgv[lgo[i]:lgo[i + 1]])
-                            & set(rgv[rgo[i]:rgo[i + 1]])
-                        )
-                        for i in range(n)
-                    ),
-                    np.int32,
-                    count=n,
-                )
-                ti = np.fromiter(
-                    (
-                        len(
-                            set(ltv[lto[i]:lto[i + 1]])
-                            & set(rtv[rto[i]:rto[i + 1]])
-                        )
-                        for i in range(n)
-                    ),
-                    np.int32,
-                    count=n,
-                )
-            yield pa.RecordBatch.from_arrays(
-                [
-                    b.column(idx["left_id"]),
-                    b.column(idx["right_id"]),
-                    b.column(idx["block_key"]),
-                    pa.array(gi, pa.int32()),
-                    pa.array(np.diff(lgo).astype(np.int32), pa.int32()),
-                    pa.array(np.diff(rgo).astype(np.int32), pa.int32()),
-                    pa.array(ti, pa.int32()),
-                    pa.array(np.diff(lto).astype(np.int32), pa.int32()),
-                    pa.array(np.diff(rto).astype(np.int32), pa.int32()),
-                    pa.array(lev, pa.float64()),
-                    pa.array(jw, pa.float64()),
-                ],
-                names=[
-                    "left_id", "right_id", "block_key",
-                    "_gi", "_gl", "_gr", "_ti", "_tl", "_tr",
-                    "_lev", "_jw",
-                ],
-            )
-
-    gi, gl, gr = F.col("_gi"), F.col("_gl"), F.col("_gr")
-    ti, tl, tr = F.col("_ti"), F.col("_tl"), F.col("_tr")
-    # identical expressions (and therefore identical doubles) to the
-    # JVM route's projection below
-    return src.mapInArrow(run, out_schema).select(
-        "left_id",
-        "right_id",
-        "block_key",
-        F.round(
-            F.when(F.least(gl, gr) == 0, F.lit(1.0)).otherwise(gi / F.least(gl, gr)),
-            6,
-        ).alias("bigram_containment"),
-        F.round(
-            F.when(gl + gr - gi == 0, F.lit(1.0)).otherwise(gi / (gl + gr - gi)), 6
-        ).alias("bigram_jaccard"),
-        F.round(
-            F.when(tl + tr - ti == 0, F.lit(1.0)).otherwise(ti / (tl + tr - ti)), 6
-        ).alias("token_jaccard"),
-        F.round(F.col("_lev"), 6).alias("levenshtein"),
-        F.round(F.col("_jw"), 6).alias("jaro_winkler"),
-    )
-
-
 def score_pairs(
     pairs_with_texts: DataFrame,
     feature_weights: dict[str, float] | None = None,
     lev_max_len: int = PREFIX_LEN,
     jw_max_len: int = 128,
 ) -> DataFrame:
-    """-> (left_id, right_id, block_key, <features>, weight).
-    weight = convex combination of the features.
+    """-> (left_id, right_id, block_key, bigram_containment,
+    bigram_jaccard, token_jaccard, levenshtein, jaro_winkler, weight).
+    weight = convex combination of the features named in
+    ``feature_weights``; all five feature columns are always present,
+    custom weights or not.
 
-    Default route (r6): ONE MapInArrow stage computing every per-pair
-    feature in the native scoring kernel — see _score_pairs_arrow.
-    No exchange, no barrier, narrow output rows.
-
-    JVM fallback route (driver without a C compiler, or custom weights
-    omitting jaro_winkler): the r4/r5 two-stage plan below —
-    ONE LINEAR PLAN in two projection stages separated by a NARROW
-    barrier, on purpose:
-
-    - stage 1 (JVM codegen): ONE array_intersect per hash-set pair —
-      containment and jaccard both derive from it via
-      |A ∪ B| = |A| + |B| - |A ∩ B| (arrays are distinct), which
-      removes array_union and a duplicate intersect (measured 28s ->
-      ~7s for the bigram features on 515k pairs) — plus the pair-text
-      prefixes. This is where the wide hashed-array columns die: the
-      stage-1 output row is ids + block_key + 3 doubles + 2 short
-      strings.
-    - stage 2 (Arrow): ONE pandas UDF computing BOTH levenshtein and
-      Jaro-Winkler in a single zero-allocation C pass over the
-      prefixes (functions/jw_native.py). The JVM built-in levenshtein
-      at 256 chars was the single biggest q1 cost (measured 92s for
-      515k pairs — ~11M DP cells/s/core); the C DP runs the same
-      34G cells in ~1s across 32 cores. Falls back to JVM levenshtein
-      + the numpy JW batch when no C compiler is available.
-
-    Why the boundary: without it Catalyst collapses the projections
-    and ExtractPythonUDFs places ArrowEvalPython BELOW the combined
-    projection, streaming the BIG hashed-array columns through the
-    Python workers as pass-through (measured: anti-scaling). Round 2
-    instead split into two branches re-joined on the pair key — but
-    each branch re-evaluated the whole attach-join subtree, so the
-    expensive pairs⋈features join ran twice (three times counting
-    cluster_edges downstream) and bench q1 regressed to 176s. The
-    narrow boundary keeps ONE attach-join evaluation and a ~300 B/row
-    block-store write; throughput is measured by bench.py's
-    pairs_per_sec (see BENCH.md), not claimed here."""
-    from entityframe_spark.functions import jw_native
-
+    ONE MapInArrow stage computes every per-pair feature through
+    functions/jw_native.py score_gather (C kernel, or its pure-Python
+    twin on compiler-less workers), followed by one shared projection.
+    The input decides the route: a DataFrame carrying the gather-route
+    handle scores against the broadcast feature table
+    (_score_pairs_gather); one carrying the join route's columns packs
+    each batch into the same layout (_score_pairs_join). No exchange,
+    no barrier, narrow output rows; throughput is measured by
+    bench.py's pairs_per_sec (see BENCH.md), not claimed here."""
     w = feature_weights or DEFAULT_WEIGHTS
-
-    def _weighted(scored: DataFrame) -> DataFrame:
-        total = sum(w.values())
-        weight = None
-        for name, coef in w.items():
-            term = F.col(name) * F.lit(coef / total)
-            weight = term if weight is None else weight + term
-        return scored.withColumn("weight", F.round(weight, 6))
-
     bc = getattr(pairs_with_texts, "_ef_pair_features", None)
-    if bc is None and "lgrams" not in pairs_with_texts.columns:
+    if bc is not None:
+        scores = _score_pairs_gather(pairs_with_texts, bc, lev_max_len, jw_max_len)
+    elif "lgrams" in pairs_with_texts.columns:
+        scores = _score_pairs_join(pairs_with_texts, lev_max_len, jw_max_len)
+    else:
         raise ValueError(
             "score_pairs input carries neither feature columns nor the "
             "gather-route handle. Pass the DataFrame returned by "
@@ -581,105 +379,11 @@ def score_pairs(
             "attribute and does not survive further transformations "
             "(checkpoint/select/filter) between attach and score."
         )
-    if bc is not None:
-        # attach_pair_texts chose the gather route (guide §8): narrow
-        # pair rows + one broadcast feature table per worker
-        return _weighted(
-            _score_pairs_gather(pairs_with_texts, bc, lev_max_len, jw_max_len)
-        )
-    if "jaro_winkler" in w and jw_native.native_available():
-        return _weighted(
-            _score_pairs_arrow(pairs_with_texts, lev_max_len, jw_max_len)
-        )
-
-    lt, rt = F.col("left_text"), F.col("right_text")
-    gi, gl, gr = F.col("_gi"), F.col("_gl"), F.col("_gr")
-    ti, tl, tr = F.col("_ti"), F.col("_tl"), F.col("_tr")
-    sized = pairs_with_texts.select(
-        "left_id",
-        "right_id",
-        "block_key",
-        F.size(F.array_intersect(F.col("lgrams"), F.col("rgrams"))).alias("_gi"),
-        F.size(F.col("lgrams")).alias("_gl"),
-        F.size(F.col("rgrams")).alias("_gr"),
-        F.size(F.array_intersect(F.col("ltoks"), F.col("rtoks"))).alias("_ti"),
-        F.size(F.col("ltoks")).alias("_tl"),
-        F.size(F.col("rtoks")).alias("_tr"),
-        F.substring(lt, 1, lev_max_len).alias("_lp"),
-        F.substring(rt, 1, lev_max_len).alias("_rp"),
+    total = sum(w.values())
+    weight = None
+    for name, coef in w.items():
+        term = F.col(name) * F.lit(coef / total)
+        weight = term if weight is None else weight + term
+    return scores.select(*_feature_projection()).withColumn(
+        "weight", F.round(weight, 6)
     )
-    narrow = sized.select(
-        "left_id",
-        "right_id",
-        "block_key",
-        F.round(
-            F.when(F.least(gl, gr) == 0, F.lit(1.0)).otherwise(gi / F.least(gl, gr)),
-            6,
-        ).alias("bigram_containment"),
-        F.round(
-            F.when(gl + gr - gi == 0, F.lit(1.0)).otherwise(gi / (gl + gr - gi)), 6
-        ).alias("bigram_jaccard"),
-        F.round(
-            F.when(tl + tr - ti == 0, F.lit(1.0)).otherwise(ti / (tl + tr - ti)), 6
-        ).alias("token_jaccard"),
-        "_lp",
-        "_rp",
-    )
-    def _barrier(df: DataFrame) -> DataFrame:
-        # projection barrier before the Python stage: an EXCHANGE of
-        # the narrow rows (compressed, a few hundred MB per 10M pairs)
-        # rather than a localCheckpoint — the block-store write+read of
-        # every narrow row was a second non-scaling materialisation.
-        # Catalyst never collapses Projects across an Exchange, so
-        # ArrowEvalPython's pass-through stays narrow (see docstring).
-        n = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-        return df.repartition(n)
-
-    need_python = "jaro_winkler" in w and jw_native.native_available()
-    if "jaro_winkler" in w and not need_python:
-        # fallback: JVM levenshtein + numpy JW batch
-        narrow = _barrier(
-            narrow.withColumn(
-                "levenshtein",
-                F.round(levenshtein_sim(F.col("_lp"), F.col("_rp"), lev_max_len), 6),
-            )
-        )
-        scored = narrow.withColumn(
-            "jaro_winkler",
-            F.round(jaro_winkler_sim(F.col("_lp"), F.col("_rp"), jw_max_len), 6),
-        ).drop("_lp", "_rp")
-    elif need_python:
-        narrow = _barrier(narrow)
-
-        @F.pandas_udf("lev double, jw double")
-        def _lev_jw(a, b):
-            import pandas as pd
-
-            # re-check ON THE WORKER: a heterogeneous cluster can have
-            # compiler-less executors even when the driver compiled fine
-            # (ADVICE r3); the pure-Python batch is semantics-identical
-            batch = (
-                jw_native.lev_jw_batch_native
-                if jw_native.native_available()
-                else jw_native.lev_jw_batch_fallback
-            )
-            lev, jw = batch(
-                a.fillna("").tolist(),
-                b.fillna("").tolist(),
-                lev_max_len,
-                jw_max_len,
-            )
-            return pd.DataFrame({"lev": lev, "jw": jw})
-
-        scored = (
-            narrow.withColumn("_s", _lev_jw(F.col("_lp"), F.col("_rp")))
-            .withColumn("levenshtein", F.round(F.col("_s.lev"), 6))
-            .withColumn("jaro_winkler", F.round(F.col("_s.jw"), 6))
-            .drop("_lp", "_rp", "_s")
-        )
-    else:
-        scored = narrow.withColumn(
-            "levenshtein",
-            F.round(levenshtein_sim(F.col("_lp"), F.col("_rp"), lev_max_len), 6),
-        ).drop("_lp", "_rp")
-    return _weighted(scored)

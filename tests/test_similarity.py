@@ -1,6 +1,7 @@
-"""Similarity-function unit tests: vectorized Jaro-Winkler parity
-with the scalar reference, ANSI-safe n-gram builders on degenerate
-texts, simhash vectorization, LRU cache semantics."""
+"""Similarity-function unit tests: native Jaro-Winkler / Levenshtein /
+pair-scoring parity with the scalar Python references, ANSI-safe
+n-gram builders on degenerate texts, simhash vectorization, LRU cache
+semantics."""
 
 from __future__ import annotations
 
@@ -9,33 +10,46 @@ import random
 import pytest
 from pyspark.sql import functions as F
 
-from entityframe_spark.functions.similarity import (
-    _jaro_winkler,
-    jaro_winkler_batch,
-)
+from entityframe_spark.functions import jw_native
+from entityframe_spark.functions.similarity import _jaro_winkler
 
 
 def _rand_str(rng: random.Random, maxlen: int, alpha: str) -> str:
     return "".join(rng.choice(alpha) for _ in range(rng.randint(0, maxlen)))
 
 
+def _native_jw(a_strs, b_strs, max_len: int = 128):
+    """Jaro-Winkler column of the C lev/JW batch kernel."""
+    if not jw_native.native_available():
+        pytest.skip("no C compiler on this host")
+    return jw_native.lev_jw_batch_native(a_strs, b_strs, jw_max_len=max_len)[1]
+
+
 class TestJaroWinklerBatch:
+    """Published values and edge cases pin the scalar reference and
+    the C kernel; the kernel must match the reference bit-for-bit."""
+
     def test_known_values(self):
         # classic published JW examples
-        assert abs(jaro_winkler_batch(["martha"], ["marhta"])[0] - 0.9611111111111111) < 1e-12
-        assert abs(jaro_winkler_batch(["dixon"], ["dicksonx"])[0] - 0.8133333333333332) < 1e-9
-        assert abs(jaro_winkler_batch(["duane"], ["dwayne"])[0] - 0.84) < 1e-9
+        cases = [
+            ("martha", "marhta", 0.9611111111111111, 1e-12),
+            ("dixon", "dicksonx", 0.8133333333333332, 1e-9),
+            ("duane", "dwayne", 0.84, 1e-9),
+        ]
+        got = _native_jw([c[0] for c in cases], [c[1] for c in cases])
+        for (a, b, want, tol), g in zip(cases, got):
+            assert abs(_jaro_winkler(a, b) - want) < tol
+            assert abs(g - want) < tol
 
     def test_edge_cases(self):
-        out = jaro_winkler_batch(
-            ["", "", "abc", "a", "ab", "same"],
-            ["", "abc", "", "a", "ba", "same"],
-        )
-        assert out[0] == 1.0  # both empty == equal
-        assert out[1] == 0.0
-        assert out[2] == 0.0
-        assert out[3] == 1.0
-        assert out[5] == 1.0
+        a = ["", "", "abc", "a", "ab", "same"]
+        b = ["", "abc", "", "a", "ba", "same"]
+        for out in ([_jaro_winkler(x, y) for x, y in zip(a, b)], _native_jw(a, b)):
+            assert out[0] == 1.0  # both empty == equal
+            assert out[1] == 0.0
+            assert out[2] == 0.0
+            assert out[3] == 1.0
+            assert out[5] == 1.0
 
     @pytest.mark.parametrize("alpha", ["abcde ", "abcde éσ日", "".join(chr(0x4E00 + k) for k in range(80))])
     def test_parity_with_scalar(self, alpha):
@@ -51,14 +65,14 @@ class TestJaroWinklerBatch:
             else:
                 b = _rand_str(rng, 50, alpha)
             cases.append((a, b))
-        got = jaro_winkler_batch([a for a, _ in cases], [b for _, b in cases])
+        got = _native_jw([a for a, _ in cases], [b for _, b in cases])
         for (a, b), g in zip(cases, got):
             assert abs(_jaro_winkler(a, b) - g) < 1e-12, (a, b)
 
     def test_truncation_matches_scalar_on_prefix(self):
         a = "x" * 300
         b = "x" * 100 + "y" * 200
-        got = jaro_winkler_batch([a], [b], max_len=128)[0]
+        got = _native_jw([a], [b], max_len=128)[0]
         assert abs(_jaro_winkler(a[:128], b[:128]) - got) < 1e-12
 
 
@@ -289,20 +303,47 @@ def test_myers_lev_matches_plain_dp_across_block_boundaries():
         assert abs(got - want) < 1e-12, (a[:40], b[:40], got, want)
 
 
-def test_score_batch_native_matches_jvm_feature_path(spark):
-    """r6: the fused Arrow scoring route (C intersects + lev/JW) must
-    produce bit-identical feature values to the JVM
-    array_intersect + builtin-levenshtein route on the same pairs —
-    including unsorted hash arrays (kernel sorts internally)."""
-    import pytest
+def _round6(x: float) -> float:
+    """Spark's round(x, 6) on a double: HALF_UP on its decimal form."""
+    from decimal import ROUND_HALF_UP, Decimal
 
-    from pyspark.sql import functions as F
+    return float(Decimal(repr(x)).quantize(Decimal("1e-6"), rounding=ROUND_HALF_UP))
 
-    from entityframe_spark.functions import jw_native
+
+def _reference_features(lt, rt, lg, rg, ltk, rtk, lev_max_len=256, jw_max_len=128):
+    """Driver-side score_pairs reference from Python set sizes, the
+    scalar lev/JW references and score_pairs' formulas."""
+    from entityframe_spark.functions.jw_native import _lev_sim_py
+    from entityframe_spark.pipeline.scoring import DEFAULT_WEIGHTS
+
+    gi, gl, gr = len(set(lg) & set(rg)), len(lg), len(rg)
+    ti, tl, tr = len(set(ltk) & set(rtk)), len(ltk), len(rtk)
+    f = {
+        "bigram_containment": 1.0 if min(gl, gr) == 0 else gi / min(gl, gr),
+        "bigram_jaccard": 1.0 if gl + gr - gi == 0 else gi / (gl + gr - gi),
+        "token_jaccard": 1.0 if tl + tr - ti == 0 else ti / (tl + tr - ti),
+        "levenshtein": _lev_sim_py(lt[:lev_max_len], rt[:lev_max_len]),
+        "jaro_winkler": _jaro_winkler(lt[:jw_max_len], rt[:jw_max_len]),
+    }
+    f = {k: _round6(v) for k, v in f.items()}
+    total = sum(DEFAULT_WEIGHTS.values())
+    weight = None
+    for name, coef in DEFAULT_WEIGHTS.items():
+        term = f[name] * (coef / total)
+        weight = term if weight is None else weight + term
+    f["weight"] = _round6(weight)
+    return f
+
+
+def test_join_route_matches_python_reference(spark):
+    """The join route (pair rows carrying both sides' arrays, packed per
+    batch for the shared scoring kernel) must equal a driver-side
+    reference built from Python set sizes, _lev_sim_py and
+    _jaro_winkler — including unsorted and duplicate hash arrays (the
+    kernel sorts internally; intersects are distinct-value), empty
+    arrays/texts, and 300-char texts cut at the lev/JW prefixes."""
     from entityframe_spark.pipeline.scoring import score_pairs
 
-    if not jw_native.native_available():
-        pytest.skip("no C compiler on this host")
     rows = [
         (1, 2, "k", "alpha beta gamma", "alpha beta delta",
          [3, 1, 2], [2, 3, 9], [10, 11], [11, 12]),
@@ -317,47 +358,113 @@ def test_score_batch_native_matches_jvm_feature_path(spark):
         "right_text string, lgrams array<long>, rgrams array<long>, "
         "ltoks array<long>, rtoks array<long>",
     )
-    new = {
-        (r["left_id"], r["right_id"]): r
-        for r in score_pairs(df).collect()
-    }
-    orig = jw_native.native_available
-    try:
-        jw_native.native_available = lambda: False  # force the JVM route
-        old = {
-            (r["left_id"], r["right_id"]): r
-            for r in score_pairs(df).collect()
-        }
-    finally:
-        jw_native.native_available = orig
-    assert set(new) == set(old)
-    cols = [
-        "bigram_containment", "bigram_jaccard", "token_jaccard",
-        "levenshtein", "jaro_winkler", "weight",
+    got = {(r["left_id"], r["right_id"]): r for r in score_pairs(df).collect()}
+    assert set(got) == {(r[0], r[1]) for r in rows}
+    for r in rows:
+        want = _reference_features(*r[3:])
+        for c, v in want.items():
+            assert got[(r[0], r[1])][c] == v, (r[:2], c, got[(r[0], r[1])][c], v)
+
+
+def _random_feature_table(rng: random.Random, n_rec: int) -> tuple:
+    """Packed feature table (score_gather layout) of random records:
+    unsorted, duplicate and empty hash arrays, unicode prefixes up to
+    300 chars (packed at 256, like the broadcast table)."""
+    import pyarrow as pa
+
+    from entityframe_spark.pipeline.scoring import _list_buffers
+
+    def arrays(span):
+        return pa.array(
+            [
+                [rng.randrange(-span, span) for _ in range(rng.choice([0, 1, 2, 9, 40]))]
+                for _ in range(n_rec)
+            ],
+            pa.list_(pa.int64()),
+        )
+
+    alpha = "ab cdé σ日本\U0001F600"
+    prefixes = [
+        "".join(rng.choice(alpha) for _ in range(rng.choice([0, 1, 7, 64, 130, 300])))
+        for _ in range(n_rec)
     ]
-    for k in new:
-        for c in cols:
-            assert new[k][c] == old[k][c], (k, c, new[k][c], old[k][c])
+    return (
+        *_list_buffers(arrays(60)),
+        *_list_buffers(arrays(25)),
+        *jw_native._pack_offsets(prefixes, 256),
+    )
+
+
+def test_score_gather_python_fallback_matches_native():
+    """score_gather's pure-Python batch (compiler-less workers) must
+    return exactly what the C kernel returns on the same table and
+    record indices — intersect sizes, per-side sizes, lev and JW."""
+    import numpy as np
+
+    if not jw_native.native_available():
+        pytest.skip("no C compiler on this host")
+    rng = random.Random(11)
+    for n_rec, n_pairs in [(1, 3), (50, 400), (300, 2000)]:
+        feat = _random_feature_table(rng, n_rec)
+        li = np.array([rng.randrange(n_rec) for _ in range(n_pairs)], np.int64)
+        ri = np.array([rng.randrange(n_rec) for _ in range(n_pairs)], np.int64)
+        native = jw_native.score_gather(feat, li, ri, 256, 128)
+        python = jw_native._score_gather_py(feat, li, ri, 256, 128)
+        for name, x, y in zip(["gi", "gl", "gr", "ti", "tl", "tr", "lev", "jw"], native, python):
+            assert x.dtype == y.dtype, name
+            assert np.array_equal(x, y), name
+    with pytest.raises(IndexError, match="outside the feature table"):
+        jw_native.score_gather(feat, np.array([0]), np.array([n_rec]))
+
+
+def test_score_gather_wide_unsorted_arrays_match_reference():
+    """A pair whose unsorted hash arrays hold more than 16,384 elements
+    combined: the kernel sorts both sides into the caller-sized scratch
+    buffer and must still count the distinct common values exactly."""
+    import numpy as np
+    import pyarrow as pa
+
+    from entityframe_spark.pipeline.scoring import _list_buffers
+
+    if not jw_native.native_available():
+        pytest.skip("no C compiler on this host")
+    rng = np.random.default_rng(3)
+    a = rng.integers(0, 15_000, size=9_000).tolist()  # unsorted, duplicates
+    b = rng.integers(5_000, 20_000, size=9_000).tolist()
+    small = [3, 1, 2]
+    grams = pa.array([a, b, small], pa.list_(pa.int64()))
+    toks = pa.array([b, small, a], pa.list_(pa.int64()))
+    feat = (
+        *_list_buffers(grams),
+        *_list_buffers(toks),
+        *jw_native._pack_offsets(["left text", "right text", ""], 256),
+    )
+    li, ri = np.array([0, 0, 2]), np.array([1, 2, 0])
+    gi, gl, gr, ti, tl, tr, _, _ = jw_native.score_gather(feat, li, ri)
+    rows = [a, b, small]
+    trows = [b, small, a]
+    for k, (x, y) in enumerate(zip(li, ri)):
+        assert gi[k] == len(set(rows[x]) & set(rows[y]))
+        assert ti[k] == len(set(trows[x]) & set(trows[y]))
+        assert (gl[k], gr[k], tl[k], tr[k]) == (
+            len(rows[x]), len(rows[y]), len(trows[x]), len(trows[y])
+        )
+    assert len(a) + len(b) > 16_384
 
 
 def test_gather_route_matches_join_route(spark):
     """r6: attach_pair_texts' gather route (python-broadcast feature
     table + narrow pair stream) must score identically to the wide
     broadcast-join route, and drop pairs whose ids lack features (the
-    join route's inner-join semantics)."""
-    import pytest
-
-    from pyspark.sql import functions as F
-
-    from entityframe_spark.functions import jw_native
+    join route's inner-join semantics). Each side asserts which route
+    it took: the gather route carries the broadcast handle, the join
+    route carries the feature columns instead."""
     from entityframe_spark.pipeline.scoring import (
         attach_pair_texts,
         prepare_record_features,
         score_pairs,
     )
 
-    if not jw_native.native_available():
-        pytest.skip("no C compiler on this host")
     feats = prepare_record_features(
         spark.createDataFrame(
             [(1, "alpha beta gamma delta"), (2, "alpha beta gamma"),
@@ -369,19 +476,15 @@ def test_gather_route_matches_join_route(spark):
         [(1, 2, "k1"), (1, 3, "k1"), (2, 99, "k2"), (3, 4, "k3")],
         "left_id long, right_id long, block_key string",
     )
-    new = {
-        (r["left_id"], r["right_id"]): r
-        for r in score_pairs(
-            attach_pair_texts(pairs, feats, features_count=4)
-        ).collect()
-    }
-    old = {
-        (r["left_id"], r["right_id"]): r
-        for r in score_pairs(
-            # broadcast_threshold=0 forces the join route
-            attach_pair_texts(pairs, feats, broadcast_threshold=0)
-        ).collect()
-    }
+    gather = attach_pair_texts(pairs, feats, features_count=4)
+    assert gather._ef_pair_features is not None
+    assert "lgrams" not in gather.columns
+    # broadcast_threshold=0 forces the join route
+    join = attach_pair_texts(pairs, feats, broadcast_threshold=0)
+    assert not hasattr(join, "_ef_pair_features")
+    assert "lgrams" in join.columns
+    new = {(r["left_id"], r["right_id"]): r for r in score_pairs(gather).collect()}
+    old = {(r["left_id"], r["right_id"]): r for r in score_pairs(join).collect()}
     assert set(new) == set(old)           # (2, 99) dropped on both routes
     assert (2, 99) not in new
     for k in new:
@@ -392,6 +495,31 @@ def test_gather_route_matches_join_route(spark):
     attached = attach_pair_texts(pairs, feats, features_count=4)
     with pytest.raises(ValueError, match="UNMODIFIED"):
         score_pairs(attached.localCheckpoint(eager=False))
+
+
+def test_empty_feature_table_scores_no_pairs_on_both_routes(spark):
+    """No feature rows and a non-empty pair stream: every pair lacks its
+    records, so both routes return 0 rows (the gather route drops the
+    batches instead of indexing an empty table)."""
+    from entityframe_spark.pipeline.scoring import (
+        attach_pair_texts,
+        prepare_record_features,
+        score_pairs,
+    )
+
+    feats = prepare_record_features(
+        spark.createDataFrame([], "record_id long, full_text string")
+    ).localCheckpoint(eager=True)
+    pairs = spark.createDataFrame(
+        [(1, 2, "k1"), (3, 4, "k2")],
+        "left_id long, right_id long, block_key string",
+    )
+    gather = attach_pair_texts(pairs, feats, features_count=0)
+    assert gather._ef_pair_features is not None
+    join = attach_pair_texts(pairs, feats, broadcast_threshold=0)
+    assert not hasattr(join, "_ef_pair_features")
+    assert score_pairs(gather).count() == 0
+    assert score_pairs(join).count() == 0
 
 
 def test_bitparallel_jw_matches_scalar_reference():
@@ -445,7 +573,7 @@ def test_bitparallel_jw_matches_scalar_reference():
         cases.append((a, b))
     av = [c[0] for c in cases]
     bv = [c[1] for c in cases]
-    jw = jw_native.jw_batch_native(av, bv, max_len=256)
+    _, jw = jw_native.lev_jw_batch_native(av, bv, jw_max_len=256)
     for (a, b), got in zip(cases, jw):
         assert abs(got - _jaro_winkler(a[:256], b[:256])) < 1e-12, (a[:40], b[:40])
 

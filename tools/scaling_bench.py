@@ -72,12 +72,11 @@ pairs = build_candidate_pairs(collapsed, max_block_size=64).localCheckpoint(eage
 n_pairs = pairs.count()
 
 # scoring: the throughput stage, SAME shape as bench.py q1 — one
-# linear plan (attach join -> JVM features -> narrow lazy checkpoint
-# -> JW pandas UDF), materialised by an eager localCheckpoint so every
+# linear plan (attach -> one MapInArrow scoring stage -> feature
+# projection), materialised by an eager localCheckpoint so every
 # feature column is physically computed (a bare count() lets Catalyst
-# prune the features; measured 30x too optimistic). The wide attached
-# rows stream through the stage; only the ~300 B/row narrow output
-# hits the block store. Each repeat rebuilds the DataFrame from
+# prune the features; measured 30x too optimistic). Only the
+# ~300 B/row narrow output hits the block store. Each repeat rebuilds the DataFrame from
 # scratch (fresh lazy checkpoint) so repeats do FULL work; warmup
 # once (codegen compile, python-worker fork, first-touch page faults
 # — this host zeroes fresh pages ~1000x slower than warm), then min
