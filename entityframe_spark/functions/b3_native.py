@@ -15,22 +15,20 @@ other; tests/test_b3_native.py pins them against each other across
 chunk/block boundaries and against the published test vectors for the
 empty and one-byte inputs.
 
-Deployment matches jw_native/uf_native: lazy compile into the per-user
-0700 cache dir (atomic rename, ownership-verified before dlopen);
-executors without a compiler fall back to the Python path.
+Deployment: ``functions/_native.py`` (the loader shared with
+``jw_native`` and ``uf_native``) compiles the C source lazily into the
+per-user 0700 cache dir; executors without a compiler warn once and
+fall back to the Python path.
 """
 
 from __future__ import annotations
 
 import ctypes
-import hashlib
-import os
 import struct
-import subprocess
 
 import numpy as np
 
-from entityframe_spark.functions.jw_native import _cache_dir
+from entityframe_spark.functions import _native
 
 _C_SOURCE = r"""
 #include <stdint.h>
@@ -195,52 +193,19 @@ void b3_hash_batch(const uint8_t* buf, const int64_t* starts,
 }
 """
 
-_lib = None
-_tried = False
-
-
-def _compile() -> "ctypes.CDLL | None":
-    digest = hashlib.sha256(_C_SOURCE.encode()).hexdigest()[:16]
-    so_path = os.path.join(_cache_dir(), f"ef_b3_{digest}.so")
-    if not os.path.exists(so_path):
-        src = so_path + f".{os.getpid()}.c"
-        tmp_so = so_path + f".{os.getpid()}.tmp"
-        with open(src, "w") as f:
-            f.write(_C_SOURCE)
-        try:
-            subprocess.run(
-                ["cc", "-O3", "-shared", "-fPIC", "-o", tmp_so, src],
-                check=True,
-                capture_output=True,
-                timeout=60,
-            )
-            os.replace(tmp_so, so_path)  # atomic: concurrent workers race safely
-        finally:
-            for p in (src, tmp_so):
-                try:
-                    os.unlink(p)
-                except OSError:
-                    pass
-    st = os.stat(so_path)
-    if st.st_uid != os.getuid():
-        raise RuntimeError(f"{so_path} not owned by current user; refusing to dlopen")
-    lib = ctypes.CDLL(so_path)
+def _bind(lib: ctypes.CDLL) -> None:
     U8P = ctypes.POINTER(ctypes.c_uint8)
     I64P = ctypes.POINTER(ctypes.c_int64)
     lib.b3_hash_batch.argtypes = [U8P, I64P, I64P, ctypes.c_int64, U8P]
     lib.b3_hash_batch.restype = None
-    return lib
+
+
+def _lib() -> "ctypes.CDLL | None":
+    return _native.load(__name__, _C_SOURCE, _bind)
 
 
 def native_available() -> bool:
-    global _lib, _tried
-    if not _tried:
-        _tried = True
-        try:
-            _lib = _compile()
-        except Exception:
-            _lib = None
-    return _lib is not None
+    return _lib() is not None
 
 
 def blake3_hex_batch(values: list[bytes]) -> list[str]:
@@ -258,7 +223,7 @@ def blake3_hex_batch(values: list[bytes]) -> list[str]:
         )
         # frombuffer is zero-copy but read-only; the kernel only reads buf
         out = np.empty(n * 32, dtype=np.uint8)
-        _lib.b3_hash_batch(
+        _lib().b3_hash_batch(
             buf.ctypes.data_as(ctypes.POINTER(ctypes.c_uint8)),
             starts.ctypes.data_as(ctypes.POINTER(ctypes.c_int64)),
             ends.ctypes.data_as(ctypes.POINTER(ctypes.c_int64)),

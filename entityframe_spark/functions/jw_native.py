@@ -16,23 +16,22 @@ record-index pairs over a packed per-record feature table; both Arrow
 routes of ``pipeline.scoring.score_pairs`` call it. ``lev_jw_batch_*``
 score plain string pairs (kernel microbenchmarks, tests).
 
-Deployment: the C source is compiled lazily, once per host, into a
-content-addressed ``.so`` in a per-user cache dir (atomic rename, so
-concurrent Python workers race safely). On a multi-executor cluster
-each executor host compiles on first use — gcc/cc is assumed present
-(standard on cluster images); if compilation fails ``score_gather``
-runs the pure-Python batch, with identical values, instead.
+Deployment: ``functions/_native.py`` (the loader shared with
+``uf_native`` and ``b3_native``) compiles the C source lazily, once
+per host, into a per-user cache dir. gcc/cc is assumed present
+(standard on cluster images); if compilation fails the loader warns
+once and ``score_gather`` runs the pure-Python batch, with identical
+values, instead.
 """
 
 from __future__ import annotations
 
 import ctypes
-import hashlib
-import os
-import subprocess
-import tempfile
 
 import numpy as np
+
+from entityframe_spark.functions import _native
+from entityframe_spark.functions._native import tune_allocator
 
 _C_SOURCE = r"""
 #include <stdint.h>
@@ -494,80 +493,8 @@ void score_batch_gather(
 }
 """
 
-_lib = None
-_tried = False
-_alloc_tuned = False
 
-
-def tune_allocator() -> None:
-    """Keep large batch buffers on the glibc heap instead of mmap.
-
-    Why: every scoring batch builds multi-MB temporaries (the utf-32
-    pack buffers, pandas/Arrow intermediates). glibc serves
-    allocations > M_MMAP_THRESHOLD (128 KB default) via mmap and
-    returns them to the OS on free — so EVERY batch faults fresh
-    zeroed pages, and this host's page-zeroing path is a contended
-    resource that anti-scales with thread count (BENCH.md: 0.60 GiB/s
-    at 8 threads -> 0.20 at 32). Raising the mmap + trim thresholds
-    makes freed buffers stay on the heap and be reused warm
-    (measured: 3x on single-threaded 10 MB alloc churn; the win grows
-    with concurrent workers because the kernel fault path is the
-    shared bottleneck). Called once per python worker from the batch
-    kernels; harmless elsewhere (slightly higher RSS)."""
-    global _alloc_tuned
-    if _alloc_tuned:
-        return
-    _alloc_tuned = True
-    try:
-        libc = ctypes.CDLL("libc.so.6")
-        libc.mallopt(-3, 1 << 29)  # M_MMAP_THRESHOLD = 512 MiB
-        libc.mallopt(-1, 1 << 29)  # M_TRIM_THRESHOLD: keep freed heap
-    except Exception:
-        pass  # non-glibc platform: nothing to tune
-
-
-def _cache_dir() -> str:
-    """Per-user 0700 cache dir (ADVICE r3: a predictable world-writable
-    /tmp path lets another local user pre-plant a malicious .so, since
-    the source — hence the digest — is public). XDG cache if set, else
-    a uid-scoped tmp dir; created 0700 and ownership-verified."""
-    base = os.environ.get("XDG_CACHE_HOME") or os.path.join(
-        tempfile.gettempdir(), f"ef-native-{os.getuid()}"
-    )
-    d = os.path.join(base, "entityframe_spark")
-    os.makedirs(d, mode=0o700, exist_ok=True)
-    st = os.stat(d)
-    if st.st_uid != os.getuid() or (st.st_mode & 0o077):
-        raise RuntimeError(f"native cache dir {d} is not owned-private; refusing")
-    return d
-
-
-def _compile() -> "ctypes.CDLL | None":
-    digest = hashlib.sha256(_C_SOURCE.encode()).hexdigest()[:16]
-    so_path = os.path.join(_cache_dir(), f"ef_jw_{digest}.so")
-    if not os.path.exists(so_path):
-        src = so_path + f".{os.getpid()}.c"
-        tmp_so = so_path + f".{os.getpid()}.tmp"
-        with open(src, "w") as f:
-            f.write(_C_SOURCE)
-        try:
-            subprocess.run(
-                ["cc", "-O3", "-shared", "-fPIC", "-o", tmp_so, src],
-                check=True,
-                capture_output=True,
-                timeout=60,
-            )
-            os.replace(tmp_so, so_path)  # atomic: concurrent workers race safely
-        finally:
-            for p in (src, tmp_so):
-                try:
-                    os.unlink(p)
-                except OSError:
-                    pass
-    st = os.stat(so_path)
-    if st.st_uid != os.getuid():
-        raise RuntimeError(f"{so_path} not owned by current user; refusing to dlopen")
-    lib = ctypes.CDLL(so_path)
+def _bind(lib: ctypes.CDLL) -> None:
     lib.lev_jw_batch.argtypes = [
         ctypes.POINTER(ctypes.c_uint32),
         ctypes.POINTER(ctypes.c_uint32),
@@ -599,18 +526,14 @@ def _compile() -> "ctypes.CDLL | None":
         ctypes.POINTER(ctypes.c_uint32),
     ]
     lib.lsh_band_hashes.restype = None
-    return lib
+
+
+def _lib() -> "ctypes.CDLL | None":
+    return _native.load(__name__, _C_SOURCE, _bind)
 
 
 def native_available() -> bool:
-    global _lib, _tried
-    if not _tried:
-        _tried = True
-        try:
-            _lib = _compile()
-        except Exception:
-            _lib = None
-    return _lib is not None
+    return _lib() is not None
 
 
 def _pack(a_strs, b_strs, max_len: int):
@@ -738,7 +661,7 @@ def lev_jw_batch_native(
     # prefix from it, so both prefixes come from the ORIGINAL string
     # whichever cap is larger (parity with lev_jw_batch_fallback)
     A, B, la, lb, width = _pack(a_strs, b_strs, max(lev_max_len, jw_max_len))
-    _lib.lev_jw_batch(
+    _lib().lev_jw_batch(
         _u32p(A), _u32p(B), _i32p(la), _i32p(lb),
         n, width, float(prefix_weight), int(lev_max_len), int(jw_max_len),
         _f64p(lev), _f64p(jw),
@@ -771,7 +694,7 @@ def lsh_band_hashes_native(
         return out
     A = np.ascontiguousarray(A, dtype=np.int64)
     B = np.ascontiguousarray(B, dtype=np.int64)
-    _lib.lsh_band_hashes(
+    _lib().lsh_band_hashes(
         _u32p(txt), _i64p(np.ascontiguousarray(off, dtype=np.int64)),
         n_docs, int(shingle_k), _i64p(A), _i64p(B),
         int(num_hashes), int(bands),
@@ -822,7 +745,7 @@ def score_gather(
     # isect_size sorts at most both sides of one pair into scratch
     widest = max(np.diff(goff).max(initial=0), np.diff(toff).max(initial=0))
     scratch = np.empty(2 * int(widest) + 1, dtype=np.int64)
-    _lib.score_batch_gather(
+    _lib().score_batch_gather(
         _i64p(gvals), _i64p(goff), _i64p(tvals), _i64p(toff),
         _u32p(pvals), _i64p(poff),
         _i64p(li), _i64p(ri), n,

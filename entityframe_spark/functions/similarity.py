@@ -135,16 +135,6 @@ def _jaro_winkler(s1: str, s2: str, prefix_weight: float = 0.1) -> float:
     return j + prefix * prefix_weight * (1.0 - j)
 
 
-def char_shingles(text: Column, k: int = 5, max_chars: int = 4096) -> Column:
-    """k-char shingle array, JVM-side: transform over a sequence of
-    start offsets. Lowercased, whitespace-normalised first."""
-    norm = F.lower(F.regexp_replace(F.substring(text, 1, max_chars), r"\s+", " "))
-    n = F.greatest(F.length(norm) - F.lit(k - 1), F.lit(1))
-    return F.array_distinct(
-        F.transform(F.sequence(F.lit(1), n), lambda i: norm.substr(i, F.lit(k)))
-    )
-
-
 def make_lsh_band_keys_udf(
     shingle_k: int = 5,
     num_hashes: int = 32,
@@ -218,35 +208,3 @@ def make_lsh_band_keys_udf(
         return pd.Series(out)
 
     return band_keys
-
-
-def minhash_signature(shingles: Column, num_hashes: int = 32) -> Column:
-    """MinHash signature as array<long>, entirely JVM-side: the i-th
-    hash is min over shingles of xxhash64(i, shingle). Empty shingle
-    sets get hash of the empty marker."""
-    sig = [
-        F.array_min(
-            F.transform(shingles, lambda s, i=i: F.xxhash64(F.lit(i), s))
-        )
-        for i in range(num_hashes)
-    ]
-    return F.array(*sig)
-
-
-def lsh_band_keys(signature: Column, bands: int, rows_per_band: int) -> Column:
-    """Band the signature: array of ``bands`` string keys
-    'b:<band>:<hash of band slice>'. Records sharing any band key are
-    LSH candidates."""
-    keys = []
-    for b in range(bands):
-        band_slice = F.slice(signature, b * rows_per_band + 1, rows_per_band)
-        keys.append(
-            F.concat_ws(
-                ":",
-                F.lit(f"b{b}"),
-                F.xxhash64(F.concat_ws(",", F.transform(band_slice, lambda x: x.cast("string")))).cast(
-                    "string"
-                ),
-            )
-        )
-    return F.array(*keys)

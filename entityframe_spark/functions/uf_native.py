@@ -1,38 +1,34 @@
-"""Native (C, via ctypes) union-find kernels for the per-component /
+"""Union-find kernels (C, via ctypes) for the per-component /
 per-block local work inside Arrow tasks.
 
-Why this exists (VERDICT r3 "Wrong #3"): the exact local paths —
-single-linkage dendrogram sweeps (`operators/hierarchy.py`), per-block
-connected components (`operators/components.py`), and the grid
-membership reconstruction — iterated edges one-by-one in pure Python
-inside a single applyInPandas task. Bounded by
-``max_component_edges=10M``, but a component at the cap was a ~10M
--iteration Python loop in ONE task (minutes); at 100x scale that is
-the first thing to melt. These kernels run the same union-find
+Why C (VERDICT r3 "Wrong #3"): the exact local paths — single-linkage
+dendrogram sweeps (``operators/hierarchy.py``), per-block connected
+components (``operators/components.py``), and the grid membership
+reconstruction — iterated edges one-by-one in pure Python inside a
+single applyInPandas task; a component at the 10M-edge cap was a
+minutes-long loop in ONE task. These kernels run the same union-find
 semantics (union by MIN node id -> deterministic min-id
-representatives, reference builder.rs:146-218) over int64 index
-arrays at C speed (~100M unions/s/core vs ~1M/s in Python).
+representatives, reference builder.rs:146-218) at C speed (~100M
+unions/s/core vs ~1M/s in Python).
 
-Node ids are sparse int64; the Python wrappers map them to dense
-indices with vectorized ``np.searchsorted`` over the sorted unique
-node array (so "min index" == "min node id" inside the kernels) and
-map results back by fancy-indexing. Deployment model matches
-``jw_native``: ~100 lines of C compiled lazily once per host into a
-per-user 0700 cache dir (atomic rename; ownership-verified before
-dlopen); every caller keeps a pure-Python/numpy fallback for
-compiler-less workers.
+Callers use one entry point per kernel — :func:`components`,
+:func:`single_linkage`, :func:`msf_mask`, :func:`grid_labels` — with
+raw int64 node ids. Each maps ids to dense indices once (directly, or
+by ``np.searchsorted`` over the sorted unique nodes, so "min index" ==
+"min node id"), runs the C kernel when ``functions/_native.py`` loaded
+it in this process and its pure-Python twin (``_*_py``, same outputs)
+otherwise, and maps results back to ids. :func:`grid_labels` is
+:func:`grid_edges` (the mapping) then :func:`grid_labels_indexed`.
 """
 
 from __future__ import annotations
 
 import ctypes
-import hashlib
-import os
-import subprocess
 
 import numpy as np
 
-from entityframe_spark.functions.jw_native import _cache_dir, tune_allocator
+from entityframe_spark.functions import _native
+from entityframe_spark.functions._native import tune_allocator
 
 _C_SOURCE = r"""
 #include <stdint.h>
@@ -152,36 +148,8 @@ void uf_grid_labels(const int64_t* child, const int64_t* par,
 }
 """
 
-_lib = None
-_tried = False
 
-
-def _compile() -> "ctypes.CDLL | None":
-    digest = hashlib.sha256(_C_SOURCE.encode()).hexdigest()[:16]
-    so_path = os.path.join(_cache_dir(), f"ef_uf_{digest}.so")
-    if not os.path.exists(so_path):
-        src = so_path + f".{os.getpid()}.c"
-        tmp_so = so_path + f".{os.getpid()}.tmp"
-        with open(src, "w") as f:
-            f.write(_C_SOURCE)
-        try:
-            subprocess.run(
-                ["cc", "-O3", "-shared", "-fPIC", "-o", tmp_so, src],
-                check=True,
-                capture_output=True,
-                timeout=60,
-            )
-            os.replace(tmp_so, so_path)  # atomic: concurrent workers race safely
-        finally:
-            for p in (src, tmp_so):
-                try:
-                    os.unlink(p)
-                except OSError:
-                    pass
-    st = os.stat(so_path)
-    if st.st_uid != os.getuid():
-        raise RuntimeError(f"{so_path} not owned by current user; refusing to dlopen")
-    lib = ctypes.CDLL(so_path)
+def _bind(lib: ctypes.CDLL) -> None:
     I64P = ctypes.POINTER(ctypes.c_int64)
     lib.uf_components.argtypes = [I64P, I64P, ctypes.c_int64, ctypes.c_int64, I64P]
     lib.uf_components.restype = None
@@ -194,18 +162,14 @@ def _compile() -> "ctypes.CDLL | None":
     U8P = ctypes.POINTER(ctypes.c_uint8)
     lib.uf_msf_mask.argtypes = [I64P, I64P, ctypes.c_int64, ctypes.c_int64, I64P, U8P]
     lib.uf_msf_mask.restype = None
-    return lib
+
+
+def _lib() -> "ctypes.CDLL | None":
+    return _native.load(__name__, _C_SOURCE, _bind)
 
 
 def native_available() -> bool:
-    global _lib, _tried
-    if not _tried:
-        _tried = True
-        try:
-            _lib = _compile()
-        except Exception:
-            _lib = None
-    return _lib is not None
+    return _lib() is not None
 
 
 def _i64(a) -> np.ndarray:
@@ -216,12 +180,134 @@ def _p(a: np.ndarray):
     return a.ctypes.data_as(ctypes.POINTER(ctypes.c_int64))
 
 
+# ---------------------------------------------------------------------------
+# entry points: raw int64 node ids in, node ids (or node indices) out
+# ---------------------------------------------------------------------------
+
+
+def _index(src: np.ndarray, dst: np.ndarray):
+    """(src_idx, dst_idx, nodes, n_nodes) for a non-empty edge list.
+
+    Dense-id fast path (``nodes`` is None): interned record ids are
+    0..n-1 by construction (core/records.py two-phase rank), so when
+    the ids already fit a small non-negative span the kernel indexes
+    them DIRECTLY — skipping np.unique + 2x searchsorted, which
+    dominate large single-task sweeps (measured at 10M edges: 10.3s of
+    a 17s sweep; they are also 3 full-size fresh allocations on a host
+    where page faults are the contended resource, BENCH.md). The
+    2m+16 span bound keeps kernel array memory within the sparse
+    path's |nodes| <= 2m worst case. Other ids take the sparse path:
+    sorted unique nodes and their searchsorted indices."""
+    lo = min(int(src.min()), int(dst.min()))
+    span = max(int(src.max()), int(dst.max())) + 1
+    if lo >= 0 and span <= 2 * len(src) + 16:
+        return src, dst, None, span
+    nodes = np.unique(np.concatenate([src, dst]))
+    return np.searchsorted(nodes, src), np.searchsorted(nodes, dst), nodes, len(nodes)
+
+
+def components(src, dst) -> tuple[np.ndarray, np.ndarray]:
+    """(nodes, component label per node) of an edge list: ``nodes``
+    are the sorted distinct endpoints, each label the min node id of
+    its component."""
+    src, dst = _i64(src), _i64(dst)
+    if len(src) == 0:
+        return np.empty(0, np.int64), np.empty(0, np.int64)
+    si, di, nodes, n = _index(src, dst)
+    kernel = components_native if native_available() else _components_py
+    roots = kernel(si, di, n)
+    if nodes is not None:
+        return nodes, nodes[roots]
+    # dense ids: the kernel labelled the whole span; keep the endpoints
+    present = np.zeros(n, dtype=bool)
+    present[src] = True
+    present[dst] = True
+    nodes = np.flatnonzero(present)
+    return nodes, roots[nodes]
+
+
+def single_linkage(src, dst, wfp):
+    """Sized single-linkage sweep (builder.rs:146-218) over edges
+    already in (-w_fp, src, dst) order: (t, child, parent, left_size,
+    right_size) arrays, one merge event per union — child is the
+    absorbed cluster's representative, parent the kept min-id one,
+    left/right the kept/absorbed cluster sizes."""
+    src, dst, wfp = _i64(src), _i64(dst), _i64(wfp)
+    if len(src) == 0:
+        return tuple(np.empty(0, np.int64) for _ in range(5))
+    si, di, nodes, n = _index(src, dst)
+    kernel = single_linkage_native if native_available() else _single_linkage_py
+    t, c, p, ls, rs = kernel(si, di, wfp, n)
+    if nodes is not None:
+        c, p = nodes[c], nodes[p]
+    return t, c, p, ls, rs
+
+
+def msf_mask(src, dst) -> np.ndarray:
+    """Boolean keep-mask of the canonical max-spanning forest over
+    edges already in (-w_fp, src, dst) order."""
+    src, dst = _i64(src), _i64(dst)
+    if len(src) == 0:
+        return np.zeros(0, dtype=bool)
+    si, di, _, n = _index(src, dst)
+    kernel = msf_mask_native if native_available() else _msf_mask_py
+    return kernel(si, di, n)
+
+
+def _node_index(nodes: np.ndarray, vals: np.ndarray, what: str) -> np.ndarray:
+    """searchsorted index of every value in ``nodes``, with a loud
+    contract check: an absent id would give an index the grid kernel
+    uses to read and write parent[] out of bounds (ADVICE r4)."""
+    idx = np.searchsorted(nodes, vals)
+    bad = (idx >= len(nodes)) | (nodes[np.minimum(idx, len(nodes) - 1)] != vals)
+    if bad.any():
+        missing = np.unique(vals[bad])[:10]
+        raise ValueError(
+            f"merge edges reference {what} record ids absent from records "
+            f"(first missing: {missing.tolist()}); every merge-edge endpoint "
+            "must appear in the records frame"
+        )
+    return idx
+
+
+def grid_edges(child, parent, tf, nodes: np.ndarray):
+    """Merge edges (child, parent, threshold_fp), in any order, as the
+    grid kernel takes them: sorted by threshold_fp DESC (stable), with
+    endpoints as indices into ``nodes`` (sorted distinct record ids).
+    Raises ValueError when an endpoint is not in ``nodes``."""
+    tf = _i64(tf)
+    order = np.argsort(-tf, kind="stable")
+    ci = _node_index(nodes, _i64(child)[order], "child")
+    pi = _node_index(nodes, _i64(parent)[order], "parent")
+    return ci, pi, tf[order]
+
+
+def grid_labels_indexed(child_idx, parent_idx, tf, n_nodes: int, grid_desc) -> np.ndarray:
+    """:func:`grid_labels` over edges already in :func:`grid_edges`
+    form — for callers that prepare them once and label many grids."""
+    kernel = grid_labels_native if native_available() else _grid_labels_py
+    return kernel(child_idx, parent_idx, tf, n_nodes, _i64(grid_desc))
+
+
+def grid_labels(child, parent, tf, nodes: np.ndarray, grid_desc) -> np.ndarray:
+    """Label matrix (|grid|, |nodes|): the index in ``nodes`` of each
+    record's cluster representative at each threshold of ``grid_desc``
+    (descending), given merge edges as :func:`grid_edges` takes them."""
+    edges = grid_edges(child, parent, tf, nodes)
+    return grid_labels_indexed(*edges, len(nodes), grid_desc)
+
+
+# ---------------------------------------------------------------------------
+# C kernels over dense indices 0..n_nodes-1
+# ---------------------------------------------------------------------------
+
+
 def components_native(src_idx: np.ndarray, dst_idx: np.ndarray, n_nodes: int) -> np.ndarray:
     """Root index per node (0..n_nodes-1); union by min index."""
     tune_allocator()
     src_idx, dst_idx = _i64(src_idx), _i64(dst_idx)
     out = np.empty(n_nodes, dtype=np.int64)
-    _lib.uf_components(_p(src_idx), _p(dst_idx), len(src_idx), n_nodes, _p(out))
+    _lib().uf_components(_p(src_idx), _p(dst_idx), len(src_idx), n_nodes, _p(out))
     return out
 
 
@@ -236,7 +322,7 @@ def single_linkage_native(
     parent = np.empty(n_nodes, dtype=np.int64)
     size = np.empty(n_nodes, dtype=np.int64)
     out = [np.empty(cap, dtype=np.int64) for _ in range(5)]
-    m = _lib.uf_single_linkage(
+    m = _lib().uf_single_linkage(
         _p(src_idx), _p(dst_idx), _p(wfp), len(src_idx), n_nodes,
         _p(parent), _p(size), *[_p(o) for o in out],
     )
@@ -251,7 +337,7 @@ def msf_mask_native(src_idx: np.ndarray, dst_idx: np.ndarray, n_nodes: int) -> n
     src_idx, dst_idx = _i64(src_idx), _i64(dst_idx)
     parent = np.empty(n_nodes, dtype=np.int64)
     mask = np.empty(len(src_idx), dtype=np.uint8)
-    _lib.uf_msf_mask(
+    _lib().uf_msf_mask(
         _p(src_idx), _p(dst_idx), len(src_idx), n_nodes, _p(parent),
         mask.ctypes.data_as(ctypes.POINTER(ctypes.c_uint8)),
     )
@@ -272,8 +358,89 @@ def grid_labels_native(
     grid_desc = _i64(grid_desc)
     parent = np.empty(n_nodes, dtype=np.int64)
     out = np.empty(len(grid_desc) * n_nodes, dtype=np.int64)
-    _lib.uf_grid_labels(
+    _lib().uf_grid_labels(
         _p(child_idx), _p(parent_idx), _p(tf), len(child_idx), n_nodes,
         _p(grid_desc), len(grid_desc), _p(parent), _p(out),
     )
     return out.reshape(len(grid_desc), n_nodes)
+
+
+# ---------------------------------------------------------------------------
+# pure-Python twins: same inputs, outputs and values as the C kernels
+# ---------------------------------------------------------------------------
+
+
+def _find(parent: list[int], x: int) -> int:
+    """Root of x, halving the path (each visited node skips to its
+    grandparent). Unions always keep the min index as root, so roots
+    do not depend on how find compresses."""
+    while parent[x] != x:
+        parent[x] = parent[parent[x]]
+        x = parent[x]
+    return x
+
+
+def _union_min(parent: list[int], a: int, b: int) -> bool:
+    """Union the sets of a and b under the smaller root; False when
+    they were already one set."""
+    ra, rb = _find(parent, a), _find(parent, b)
+    if ra == rb:
+        return False
+    if ra < rb:
+        parent[rb] = ra
+    else:
+        parent[ra] = rb
+    return True
+
+
+def _components_py(src_idx: np.ndarray, dst_idx: np.ndarray, n_nodes: int) -> np.ndarray:
+    parent = list(range(n_nodes))
+    for s, d in zip(src_idx.tolist(), dst_idx.tolist()):
+        _union_min(parent, s, d)
+    return np.array([_find(parent, i) for i in range(n_nodes)], dtype=np.int64)
+
+
+def _single_linkage_py(
+    src_idx: np.ndarray, dst_idx: np.ndarray, wfp: np.ndarray, n_nodes: int
+) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
+    parent = list(range(n_nodes))
+    size = [1] * n_nodes
+    events: list[tuple[int, int, int, int, int]] = []
+    for s, d, t in zip(src_idx.tolist(), dst_idx.tolist(), wfp.tolist()):
+        rs, rd = _find(parent, s), _find(parent, d)
+        if rs == rd:
+            continue
+        keep, drop = (rs, rd) if rs < rd else (rd, rs)
+        events.append((t, drop, keep, size[keep], size[drop]))
+        size[keep] += size[drop]
+        parent[drop] = keep
+    arr = np.array(events, dtype=np.int64).reshape(-1, 5)
+    return tuple(np.ascontiguousarray(arr[:, k]) for k in range(5))  # type: ignore[return-value]
+
+
+def _msf_mask_py(src_idx: np.ndarray, dst_idx: np.ndarray, n_nodes: int) -> np.ndarray:
+    parent = list(range(n_nodes))
+    return np.fromiter(
+        (_union_min(parent, s, d) for s, d in zip(src_idx.tolist(), dst_idx.tolist())),
+        dtype=bool,
+        count=len(src_idx),
+    )
+
+
+def _grid_labels_py(
+    child_idx: np.ndarray,
+    parent_idx: np.ndarray,
+    tf: np.ndarray,
+    n_nodes: int,
+    grid_desc: np.ndarray,
+) -> np.ndarray:
+    parent = list(range(n_nodes))
+    edges = list(zip(tf.tolist(), child_idx.tolist(), parent_idx.tolist()))
+    out = np.empty((len(grid_desc), n_nodes), dtype=np.int64)
+    pos = 0
+    for g, t in enumerate(grid_desc.tolist()):  # descending: only coarsens
+        while pos < len(edges) and edges[pos][0] >= t:
+            _union_min(parent, edges[pos][1], edges[pos][2])
+            pos += 1
+        out[g] = [_find(parent, i) for i in range(n_nodes)]
+    return out

@@ -13,7 +13,10 @@ whole engine uses (SURVEY.md §4 determinism discipline).
 For blocked graphs (candidate edges only within small blocks) the
 exact per-block union-find runs as an Arrow-batched applyInPandas —
 no global iteration at all (reference's own designed "blocked
-parallel hierarchies", docs/design/algorithms.md:789-799).
+parallel hierarchies", docs/design/algorithms.md:789-799). Every
+in-task union-find (per block, the single-task path, the contraction
+pass) is ``uf_native.components``: the C kernel, or its pure-Python
+twin on compiler-less workers.
 """
 
 from __future__ import annotations
@@ -65,51 +68,13 @@ def _ckpt_unpersist(df: DataFrame) -> None:
         pass  # API drift: degrade to keep-until-context-GC
 
 from entityframe_spark.functions import uf_native
-from entityframe_spark.functions.jw_native import tune_allocator
+from entityframe_spark.functions._native import tune_allocator
 
 # fire in every pyspark worker at closure-deserialize time, BEFORE the
 # first Arrow batch is materialised: the multi-hundred-MB single-task
 # batches otherwise fault fresh pages on every run (host confounder,
 # BENCH.md); harmless on the driver
 tune_allocator()
-
-
-def local_component_labels(
-    src: np.ndarray, dst: np.ndarray
-) -> tuple[np.ndarray, np.ndarray]:
-    """(nodes, component label per node) for one in-task edge batch.
-
-    C kernel when available (the per-edge Python loop was the
-    single-task throughput bound at the 10M-edge component cap —
-    VERDICT r3), numpy/Python union-find fallback otherwise. Both
-    paths: union by min node id -> deterministic min-id labels."""
-    src = np.ascontiguousarray(src, dtype=np.int64)
-    dst = np.ascontiguousarray(dst, dtype=np.int64)
-    if len(src) == 0:
-        return np.empty(0, np.int64), np.empty(0, np.int64)
-    if uf_native.native_available():
-        # dense-id fast path (same bound as hierarchy._sweep_arrays):
-        # interned ids are 0..n-1, so when the id span fits ~2m the
-        # kernel indexes them directly and a boolean presence mask
-        # replaces the O(m log m) unique + 2x searchsorted that
-        # dominate large batches on this host (fresh-page confounder,
-        # BENCH.md). min-index unions == min-id unions holds trivially
-        # under the identity mapping.
-        lo = min(int(src.min()), int(dst.min()))
-        span = max(int(src.max()), int(dst.max())) + 1
-        if lo >= 0 and span <= 2 * len(src) + 16:
-            roots = uf_native.components_native(src, dst, span)
-            present = np.zeros(span, dtype=bool)
-            present[src] = True
-            present[dst] = True
-            nodes = np.flatnonzero(present)
-            return nodes, roots[nodes]
-        nodes = np.unique(np.concatenate([src, dst]))
-        si = np.searchsorted(nodes, src)
-        di = np.searchsorted(nodes, dst)
-        return nodes, nodes[uf_native.components_native(si, di, len(nodes))]
-    nodes = np.unique(np.concatenate([src, dst]))
-    return nodes, union_find_numpy(src, dst, nodes)
 
 
 def _canonical(e: DataFrame) -> DataFrame:
@@ -185,7 +150,7 @@ def _cc_single_task(e: DataFrame) -> DataFrame:
                 vs.append(pdf["v"].to_numpy(dtype=np.int64))
         if not us:
             return
-        nodes, comp = local_component_labels(
+        nodes, comp = uf_native.components(
             np.concatenate(us) if len(us) > 1 else us[0],
             np.concatenate(vs) if len(vs) > 1 else vs[0],
         )
@@ -230,7 +195,7 @@ def _contract_partitions(e_uv: DataFrame, n_parts: int | None) -> DataFrame:
             return
         src = np.concatenate(srcs) if len(srcs) > 1 else srcs[0]
         dst = np.concatenate(dsts) if len(dsts) > 1 else dsts[0]
-        nodes, comp = local_component_labels(src, dst)
+        nodes, comp = uf_native.components(src, dst)
         mask = comp != nodes
         roots, members = comp[mask], nodes[mask]
         for i in range(0, len(members), _YIELD_CHUNK):
@@ -436,42 +401,6 @@ def connected_components(
     return members.unionAll(roots).dropDuplicates(["node"])
 
 
-# ---------------------------------------------------------------------------
-# exact in-memory union-find (per-block / per-component local path)
-# ---------------------------------------------------------------------------
-
-
-def union_find_numpy(src: np.ndarray, dst: np.ndarray, nodes: np.ndarray) -> np.ndarray:
-    """Plain union-find with path compression; root = min id.
-
-    Semantics match the reference's UnionFind sweep
-    (builder.rs:146-218): every union picks the smaller representative
-    so labels are deterministic min-ids.
-    Returns component label per entry of ``nodes``.
-    """
-    idx = {int(n): i for i, n in enumerate(nodes)}
-    parent = np.arange(len(nodes), dtype=np.int64)
-
-    def find(x: int) -> int:
-        root = x
-        while parent[root] != root:
-            root = parent[root]
-        while parent[x] != root:
-            parent[x], x = root, parent[x]
-        return root
-
-    for s, d in zip(src, dst):
-        rs, rd = find(idx[int(s)]), find(idx[int(d)])
-        if rs == rd:
-            continue
-        # union by min node id to keep deterministic representatives
-        if nodes[rs] <= nodes[rd]:
-            parent[rd] = rs
-        else:
-            parent[rs] = rd
-    return np.array([nodes[find(i)] for i in range(len(nodes))], dtype=np.int64)
-
-
 def connected_components_blocked(
     edges: DataFrame,
     block_col: str,
@@ -491,7 +420,7 @@ def connected_components_blocked(
     )
 
     def per_block(pdf: pd.DataFrame) -> pd.DataFrame:
-        nodes, comp = local_component_labels(pdf["src"].values, pdf["dst"].values)
+        nodes, comp = uf_native.components(pdf["src"].values, pdf["dst"].values)
         return pd.DataFrame({"node": nodes, "component": comp})
 
     out = sel.groupBy("_block").applyInPandas(per_block, schema="node long, component long")

@@ -42,8 +42,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from entityframe_spark.functions import uf_native
+from entityframe_spark.functions._native import tune_allocator
 from entityframe_spark.operators.components import _YIELD_CHUNK, connected_components
-from entityframe_spark.functions.jw_native import tune_allocator
 
 # fire in every pyspark worker at closure-deserialize time, BEFORE the
 # first Arrow batch is materialised: the multi-hundred-MB single-task
@@ -55,19 +55,6 @@ MERGE_EDGE_SCHEMA = "threshold_fp long, child long, parent long"
 
 
 def _sweep_arrays(pdf: pd.DataFrame):
-    """pandas adapter over :func:`_sweep_arrays_np` (tests and small
-    callers); the executor hot paths pass numpy columns directly and
-    never build an intermediate concatenated DataFrame."""
-    return _sweep_arrays_np(
-        pdf["src"].to_numpy(dtype=np.int64),
-        pdf["dst"].to_numpy(dtype=np.int64),
-        pdf["w_fp"].to_numpy(dtype=np.int64),
-    )
-
-
-def _sweep_arrays_np(
-    src: np.ndarray, dst: np.ndarray, wfp: np.ndarray, presorted: bool = False
-):
     """Sort one component's edges by threshold DESC, ties by (src,
     dst) ASC — a CONTENT-based total order, so the merge-event
     sequence is identical no matter how edges arrive (shuffle arrival
@@ -75,80 +62,26 @@ def _sweep_arrays_np(
     single-task path sees a different arrival order than the
     per-component path; input-order ties would make the dendrogram
     tree shape flap run-to-run). Emits the sized merge-event arrays
-    (t, child_id, parent_id, left_size, right_size).
+    (t, child_id, parent_id, left_size, right_size) of
+    ``uf_native.single_linkage`` (C kernel, or its Python twin),
+    mirroring builder.rs:146-218: all edges at an equal threshold
+    process in one batch (n-way merges fall out naturally);
+    duplicate/cycle edges are skipped; the representative stays the
+    min record id.
 
-    ``presorted=True`` asserts the caller already delivered rows in
-    that exact order — the executor hot paths do it JVM-side with
+    Tests and small callers only: the executor hot paths
+    (:func:`_sweep_run`) sort JVM-side with
     ``sortWithinPartitions(desc(w_fp), src, dst)``, which Tungsten
     runs spill-aware during the shuffle instead of as 3 stable numpy
     argsort passes + 3 full-size takes in the single Python task
     (measured 10M-node/50M-edge giant component: lexsort 119s +
-    take 67s of a ~260s in-process sweep).
-
-    C kernel when available (the per-edge Python loop bounded
-    single-task throughput at ~1M edges/s; the kernel runs ~100M/s —
-    VERDICT r3 Wrong #3), Python union-find fallback otherwise. Both
-    mirror builder.rs:146-218: all edges at an equal threshold process
-    in one batch (n-way merges fall out naturally); duplicate/cycle
-    edges are skipped; the representative stays the min record id.
-    """
-    if not presorted:
-        # lexsort: last key is primary -> (-w_fp, src, dst) total order
-        order = np.lexsort((dst, src, -wfp))
-        src, dst, wfp = src[order], dst[order], wfp[order]
-
-    if uf_native.native_available() and len(src):
-        # Dense-id fast path: interned record ids are 0..n-1 by
-        # construction (core/records.py two-phase rank), so when ids
-        # already fit a small non-negative span the kernel can index
-        # them DIRECTLY — skipping np.unique + 2x searchsorted, which
-        # dominate large single-task sweeps (measured at 10M edges:
-        # 10.3s of a 17s sweep; they are also 3 full-size fresh
-        # allocations on a host where page faults are the contended
-        # resource, BENCH.md). The 2m+16 span bound keeps kernel array
-        # memory within the sparse path's existing |nodes|<=2m worst
-        # case. Hash-ids (full-range/negative) take the sparse path.
-        lo = min(int(src.min()), int(dst.min()))
-        span = max(int(src.max()), int(dst.max())) + 1
-        if lo >= 0 and span <= 2 * len(src) + 16:
-            t, c, p, ls, rs = uf_native.single_linkage_native(src, dst, wfp, span)
-            return t, c, p, ls, rs
-
-    nodes = np.unique(np.concatenate([src, dst]))
-    if uf_native.native_available():
-        si = np.searchsorted(nodes, src)
-        di = np.searchsorted(nodes, dst)
-        t, c, p, ls, rs = uf_native.single_linkage_native(si, di, wfp, len(nodes))
-        return t, nodes[c], nodes[p], ls, rs
-
-    idx = {int(n): i for i, n in enumerate(nodes)}
-    parent = np.arange(len(nodes), dtype=np.int64)
-    size = np.ones(len(nodes), dtype=np.int64)
-
-    def find(x: int) -> int:
-        root = x
-        while parent[root] != root:
-            root = parent[root]
-        while parent[x] != root:
-            parent[x], x = root, parent[x]
-        return root
-
-    rows: list[tuple[int, int, int, int, int]] = []
-    for s, d, t in zip(src, dst, wfp):
-        ri, rj = find(idx[int(s)]), find(idx[int(d)])
-        if ri == rj:
-            continue
-        if nodes[ri] <= nodes[rj]:
-            keep, drop = ri, rj
-        else:
-            keep, drop = rj, ri
-        rows.append(
-            (int(t), int(nodes[drop]), int(nodes[keep]), int(size[keep]), int(size[drop]))
-        )
-        size[keep] += size[drop]
-        parent[drop] = keep
-    arr = np.array(rows, dtype=np.int64).reshape(-1, 5)
-    return arr[:, 0], arr[:, 1], arr[:, 2], arr[:, 3], arr[:, 4]
+    take 67s of a ~260s in-process sweep)."""
+    src = pdf["src"].to_numpy(dtype=np.int64)
+    dst = pdf["dst"].to_numpy(dtype=np.int64)
+    wfp = pdf["w_fp"].to_numpy(dtype=np.int64)
+    # lexsort: last key is primary -> (-w_fp, src, dst) total order
+    order = np.lexsort((dst, src, -wfp))
+    return uf_native.single_linkage(src[order], dst[order], wfp[order])
 
 
 def _local_single_linkage(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -198,11 +131,10 @@ def _sweep_run(batches, sized: bool):
             ws.append(b["w_fp"].to_numpy(dtype=np.int64))
     if not srcs:
         return
-    t, c, p, ls, rs = _sweep_arrays_np(
+    t, c, p, ls, rs = uf_native.single_linkage(
         np.concatenate(srcs) if len(srcs) > 1 else srcs[0],
         np.concatenate(dsts) if len(dsts) > 1 else dsts[0],
         np.concatenate(ws) if len(ws) > 1 else ws[0],
-        presorted=True,
     )
     for i in range(0, len(t), _YIELD_CHUNK):
         cols = {
@@ -214,48 +146,6 @@ def _sweep_run(batches, sized: bool):
             cols["left_size"] = ls[i : i + _YIELD_CHUNK]
             cols["right_size"] = rs[i : i + _YIELD_CHUNK]
         yield pd.DataFrame(cols)
-
-
-def _msf_keep_mask(src: np.ndarray, dst: np.ndarray) -> np.ndarray:
-    """Keep-mask of the canonical max-spanning forest over edges
-    ALREADY in (-w_fp, src, dst) order: same dense-id fast path /
-    sparse searchsorted mapping as :func:`_sweep_arrays_np`, same
-    pure-Python union-find fallback for compiler-less workers."""
-    n = len(src)
-    if n == 0:
-        return np.zeros(0, dtype=bool)
-    if uf_native.native_available():
-        lo = min(int(src.min()), int(dst.min()))
-        span = max(int(src.max()), int(dst.max())) + 1
-        if lo >= 0 and span <= 2 * n + 16:
-            return uf_native.msf_mask_native(src, dst, span)
-        nodes = np.unique(np.concatenate([src, dst]))
-        return uf_native.msf_mask_native(
-            np.searchsorted(nodes, src), np.searchsorted(nodes, dst), len(nodes)
-        )
-    nodes = np.unique(np.concatenate([src, dst]))
-    idx = {int(v): i for i, v in enumerate(nodes)}
-    parent = np.arange(len(nodes), dtype=np.int64)
-
-    def find(x: int) -> int:
-        root = x
-        while parent[root] != root:
-            root = parent[root]
-        while parent[x] != root:
-            parent[x], x = root, parent[x]
-        return root
-
-    mask = np.zeros(n, dtype=bool)
-    for e in range(n):
-        ri, rj = find(idx[int(src[e])]), find(idx[int(dst[e])])
-        if ri == rj:
-            continue
-        if ri <= rj:
-            parent[rj] = ri
-        else:
-            parent[ri] = rj
-        mask[e] = True
-    return mask
 
 
 def _msf_filter_pass(e: DataFrame, n_parts: int | None) -> DataFrame:
@@ -286,7 +176,7 @@ def _msf_filter_pass(e: DataFrame, n_parts: int | None) -> DataFrame:
         src = np.concatenate(srcs) if len(srcs) > 1 else srcs[0]
         dst = np.concatenate(dsts) if len(dsts) > 1 else dsts[0]
         wfp = np.concatenate(ws) if len(ws) > 1 else ws[0]
-        m = _msf_keep_mask(src, dst)
+        m = uf_native.msf_mask(src, dst)
         src, dst, wfp = src[m], dst[m], wfp[m]
         for i in range(0, len(src), _YIELD_CHUNK):
             yield pd.DataFrame(
@@ -703,77 +593,18 @@ def memberships_for_grid(
                 )
             return
         nodes = np.sort(np.concatenate(rid_p) if len(rid_p) > 1 else rid_p[0])
-        if ch_p:
-            ch = np.concatenate(ch_p) if len(ch_p) > 1 else ch_p[0]
-            pa = np.concatenate(pa_p) if len(pa_p) > 1 else pa_p[0]
-            tf = np.concatenate(tf_p) if len(tf_p) > 1 else tf_p[0]
-            order = np.argsort(-tf, kind="stable")
-            ch, pa, tf = ch[order], pa[order], tf[order]
-        else:
-            ch = pa = tf = np.empty(0, dtype=np.int64)
-        grid_arr = np.array(grid_list, dtype=np.int64)  # already descending
-
-        ch_idx = np.searchsorted(nodes, ch)
-        pa_idx = np.searchsorted(nodes, pa)
-        # contract check BEFORE the kernel: an out-of-range searchsorted
-        # index would make uf_grid_labels read/write parent[] out of
-        # bounds — silent corruption where the old pure-Python path
-        # raised a KeyError (ADVICE r4)
-        for idx_arr, vals, what in ((ch_idx, ch, "child"), (pa_idx, pa, "parent")):
-            bad = (idx_arr >= len(nodes)) | (
-                nodes[np.minimum(idx_arr, len(nodes) - 1)] != vals
-            )
-            if bad.any():
-                missing = np.unique(vals[bad])[:10]
-                raise ValueError(
-                    f"merge edges reference {what} record ids absent from "
-                    f"records (first missing: {missing.tolist()}); "
-                    "memberships_for_grid requires every merge-edge "
-                    "endpoint to appear in the records frame"
-                )
-
+        # one kernel run over every component in the task: O(edges +
+        # grid*nodes), raising ValueError on an endpoint absent from
+        # the records frame
+        labels_idx = uf_native.grid_labels(
+            np.concatenate(ch_p) if ch_p else np.empty(0, np.int64),
+            np.concatenate(pa_p) if pa_p else np.empty(0, np.int64),
+            np.concatenate(tf_p) if tf_p else np.empty(0, np.int64),
+            nodes,
+            np.array(grid_list, dtype=np.int64),  # already descending
+        )
         n = len(nodes)
-        if uf_native.native_available():
-            # C kernel: O(edges + grid*nodes) with no per-edge Python;
-            # handles multiple components in one batch natively
-            labels_idx = uf_native.grid_labels_native(
-                ch_idx, pa_idx, tf, n, grid_arr
-            )
-            for g in range(len(grid_arr)):
-                row = labels_idx[g]
-                for i in range(0, n, _YIELD_CHUNK):
-                    yield pd.DataFrame(
-                        {
-                            "threshold_fp": np.full(
-                                min(_YIELD_CHUNK, n - i), grid_arr[g], dtype=np.int64
-                            ),
-                            "record_id": nodes[i : i + _YIELD_CHUNK],
-                            "cluster_id": nodes[row[i : i + _YIELD_CHUNK]],
-                        }
-                    )
-            return
-
-        parent = np.arange(n, dtype=np.int64)
-
-        def find(x: int) -> int:
-            root = x
-            while parent[root] != root:
-                root = parent[root]
-            while parent[x] != root:
-                parent[x], x = root, parent[x]
-            return root
-
-        pos = 0
-        for t in grid_list:  # descending: union-find only ever coarsens
-            while pos < len(tf) and tf[pos] >= t:
-                ri, rj = find(int(ch_idx[pos])), find(int(pa_idx[pos]))
-                if ri != rj:
-                    if ri <= rj:
-                        parent[rj] = ri
-                    else:
-                        parent[ri] = rj
-                pos += 1
-            labels = np.array([nodes[find(i)] for i in range(n)], dtype=np.int64)
+        for t, row in zip(grid_list, labels_idx):
             for i in range(0, n, _YIELD_CHUNK):
                 yield pd.DataFrame(
                     {
@@ -781,7 +612,7 @@ def memberships_for_grid(
                             min(_YIELD_CHUNK, n - i), t, dtype=np.int64
                         ),
                         "record_id": nodes[i : i + _YIELD_CHUNK],
-                        "cluster_id": labels[i : i + _YIELD_CHUNK],
+                        "cluster_id": nodes[row[i : i + _YIELD_CHUNK]],
                     }
                 )
 

@@ -13,12 +13,14 @@ rows: a 100x100 grid over 15k records is 150M joined rows (measured
 
 This module is the small-input fast path. Both dendrograms and the
 record space are collected once (gated: <= ``max_collect_rows`` rows
-total, a few hundred MB ceiling), broadcast, and the grid is
+total, a few hundred MB ceiling), sorted and mapped to record indices
+on the driver (``uf_native.grid_edges``), broadcast, and the grid is
 partitioned across executors by t_a. Each task replays the two merge
 sequences with the same union-find grid-label kernel the membership
-reconstruction uses (functions/uf_native.py, pure-numpy fallback) and
-reduces each (t_a, t_b) cell set with one vectorised np.unique — total
-work O(|grid_a| x |grid_b| x n log n) arithmetic instead of a 150M-row
+reconstruction uses (``uf_native.grid_labels_indexed``: C kernel, or
+its pure-Python twin on compiler-less workers) and reduces each (t_a,
+t_b) cell set with one vectorised np.unique — total work
+O(|grid_a| x |grid_b| x n log n) arithmetic instead of a 150M-row
 shuffle, ~50x less wall at bench scale. Inputs above the gates return
 None and the caller keeps the shuffle plan, which scales horizontally.
 
@@ -52,64 +54,6 @@ def _df_to_numpy(df: DataFrame, cols: list[str]) -> list[np.ndarray]:
     ]
 
 
-def _map_to_idx(nodes: np.ndarray, vals: np.ndarray, what: str) -> np.ndarray:
-    """searchsorted with the same loud contract check as
-    memberships_for_grid (hierarchy.py): an out-of-range index would
-    corrupt the kernel's parent[] silently."""
-    idx = np.searchsorted(nodes, vals)
-    bad = (idx >= len(nodes)) | (nodes[np.minimum(idx, len(nodes) - 1)] != vals)
-    if bad.any():
-        missing = np.unique(vals[bad])[:10]
-        raise ValueError(
-            f"merge edges reference {what} record ids absent from records "
-            f"(first missing: {missing.tolist()})"
-        )
-    return idx
-
-
-def _sorted_edges(me: tuple[np.ndarray, np.ndarray, np.ndarray], nodes):
-    tf, ch, pa = me
-    order = np.argsort(-tf, kind="stable")
-    return (
-        _map_to_idx(nodes, ch[order], "child"),
-        _map_to_idx(nodes, pa[order], "parent"),
-        tf[order],
-    )
-
-
-def _grid_label_matrix(
-    ch_idx: np.ndarray, pa_idx: np.ndarray, tf: np.ndarray, n: int,
-    grid_desc: np.ndarray,
-) -> np.ndarray:
-    """(|grid|, n) root-index matrix; C kernel when compiled, the same
-    path-halving union-find in Python otherwise (cf. hierarchy.py)."""
-    if uf_native.native_available():
-        return uf_native.grid_labels_native(ch_idx, pa_idx, tf, n, grid_desc)
-    parent = np.arange(n, dtype=np.int64)
-
-    def find(x: int) -> int:
-        root = x
-        while parent[root] != root:
-            root = parent[root]
-        while parent[x] != root:
-            parent[x], x = root, parent[x]
-        return root
-
-    out = np.empty((len(grid_desc), n), dtype=np.int64)
-    pos = 0
-    for g, t in enumerate(grid_desc):
-        while pos < len(tf) and tf[pos] >= t:
-            ri, rj = find(int(ch_idx[pos])), find(int(pa_idx[pos]))
-            if ri != rj:
-                if ri <= rj:
-                    parent[rj] = ri
-                else:
-                    parent[ri] = rj
-            pos += 1
-        out[g] = [find(i) for i in range(n)]
-    return out
-
-
 def _marginal_stats(labels: np.ndarray, n: int) -> tuple[np.ndarray, float, float]:
     """counts-per-root plus sum C(c,2) and -sum (c/N) ln(c/N)."""
     counts = np.bincount(labels, minlength=n).astype(np.float64)
@@ -140,12 +84,10 @@ def pair_sweep_stats(
     max_collect_rows bounds what is collected+broadcast (records +
     both merge-edge sets, ~24 B/row of int64s). max_pair_cells bounds
     total kernel arithmetic (|grid_a| x |grid_b| x n). max_side_cells
-    (r6, ADVICE r5) bounds the label-matrix memory on BOTH axes:
-    |grid_b| x n for the b-side matrix (computed once on the driver,
-    broadcast — VERDICT r5 #3: previously every t_a task rebuilt it,
-    ~|grid_a|/n_parts-fold redundant arithmetic, and an asymmetric
-    grid passing the older gates could allocate ~16 GB per task) and
-    ceil(|grid_a| / n_parts) x n for each task's a-side slice."""
+    bounds each task's label-matrix memory on BOTH axes: |grid_b| x n
+    for the b-side matrix every task builds, and ceil(|grid_a| /
+    n_parts) x n for its a-side slice (an asymmetric grid passing the
+    other gates could otherwise allocate ~16 GB per task)."""
     spark = records.sparkSession
     # all three gate probes in ONE job (r6): tagged union, map-side
     # partial aggregation — was three sequential count jobs
@@ -175,28 +117,16 @@ def pair_sweep_stats(
     (rid,) = _df_to_numpy(records.select("record_id"), ["record_id"])
     nodes = np.unique(rid)
     n = len(nodes)
-    ea = _sorted_edges(
-        tuple(_df_to_numpy(me_a, ["threshold_fp", "child", "parent"])), nodes
-    )
-    eb = _sorted_edges(
-        tuple(_df_to_numpy(me_b, ["threshold_fp", "child", "parent"])), nodes
-    )
+    # mapped once, on the driver: a missing endpoint raises here
+    cols = ["child", "parent", "threshold_fp"]
+    ea = uf_native.grid_edges(*_df_to_numpy(me_a, cols), nodes)
+    eb = uf_native.grid_edges(*_df_to_numpy(me_b, cols), nodes)
     grid_a = np.array(ga, dtype=np.int64)
     grid_b = np.array(gb, dtype=np.int64)
-    # VERDICT r5 #3 asked for the b-side label matrix to be computed
-    # once on the driver and broadcast. MEASURED on the bench grid
-    # (100x100, n=15k): the hoisted variant shipped a ~24 MB pickled
-    # broadcast (lb_mat + per-t_b count arrays) and made analyse_df
-    # 1.5s -> 4s — the per-task rebuild costs O(m_b + |grid_b| x n)
-    # ~= 30 ms, far below the broadcast's serialise/deserialise cost,
-    # and at larger n the matrix outgrows any sane broadcast long
-    # before the rebuild hurts. So the rebuild stays; what r6 adds is
-    # the max_side_cells gate above, which bounds that rebuild's
-    # per-task memory (the real risk ADVICE r5 flagged). Only the
-    # O(|grid_b|) scalar marginals (pair counts, entropies) are
-    # hoisted — computed once per task from its own lb_mat at
-    # negligible cost, so nothing worth shipping remains.
-    bc = spark.sparkContext.broadcast((nodes, ea, eb, grid_a, grid_b))
+    # the b-side label matrix is rebuilt in every task (~30 ms at
+    # n=15k): broadcasting it instead was measured slower on the bench
+    # grid (100x100: a ~24 MB pickle, analyse_df 1.5 s -> 4 s)
+    bc = spark.sparkContext.broadcast((n, ea, eb, grid_a, grid_b))
     # release the previous call's broadcast now that a new one
     # supersedes it (ADVICE r5: repeated sweeps on a long-lived session
     # accumulated broadcast memory). unpersist — not destroy — so an
@@ -212,20 +142,16 @@ def pair_sweep_stats(
     def run(batches):
         import pandas as pd
 
-        nodes_, ea_, eb_, ga_, gb_ = bc.value
-        n_ = len(nodes_)
+        n_, ea_, eb_, ga_, gb_ = bc.value
         my_ga: list[int] = []
         for b in batches:
             my_ga.extend(int(i) for i in b["id"])
         if not my_ga:
             return
-        # this task's slice of t_a values (kept descending) x ALL t_b:
-        # the b-side label matrix is cheap (O(edges + |grid_b| x n),
-        # measured ~30 ms at bench scale) to rebuild per task, and
-        # max_side_cells bounds its memory
+        # this task's slice of t_a values (kept descending) x ALL t_b
         sub_a = ga_[np.array(sorted(my_ga), dtype=np.int64)]
-        la_mat = _grid_label_matrix(*ea_, n_, sub_a)
-        lb_mat = _grid_label_matrix(*eb_, n_, gb_)
+        la_mat = uf_native.grid_labels_indexed(*ea_, n_, sub_a)
+        lb_mat = uf_native.grid_labels_indexed(*eb_, n_, gb_)
         b_marg = [_marginal_stats(lb_mat[j], n_) for j in range(len(gb_))]
         Nd = float(n_)
         rows = {k: [] for k in (

@@ -4,10 +4,10 @@ union-find, on adversarial shapes (chains, stars, cliques, isolated)."""
 import numpy as np
 import pytest
 
+from entityframe_spark.functions import uf_native
 from entityframe_spark.operators.components import (
     connected_components,
     connected_components_blocked,
-    union_find_numpy,
 )
 from tests.conftest import clusters_as_sets
 
@@ -55,6 +55,16 @@ def test_empty(spark):
     assert connected_components(df).count() == 0
 
 
+def _expected_labels(edges):
+    """(nodes, min-id labels) from the Python union-find twin over
+    searchsorted indices: independent of the C kernel and of the
+    dense-id mapping that the routes under test run."""
+    nodes = np.unique([x for e in edges for x in e])
+    src = np.searchsorted(nodes, [e[0] for e in edges])
+    dst = np.searchsorted(nodes, [e[1] for e in edges])
+    return nodes, nodes[uf_native._components_py(src, dst, len(nodes))]
+
+
 def test_random_graphs_match_union_find(spark):
     rng = np.random.default_rng(42)
     for trial in range(3):
@@ -63,10 +73,7 @@ def test_random_graphs_match_union_find(spark):
         src = rng.integers(0, n, m)
         dst = rng.integers(0, n, m)
         edges = [(int(a), int(b)) for a, b in zip(src, dst) if a != b]
-        nodes = np.unique([x for e in edges for x in e])
-        labels = union_find_numpy(
-            np.array([e[0] for e in edges]), np.array([e[1] for e in edges]), nodes
-        )
+        nodes, labels = _expected_labels(edges)
         expected = {}
         for node, lab in zip(nodes, labels):
             expected.setdefault(int(lab), set()).add(int(node))
@@ -90,10 +97,7 @@ def test_contract_cascade_routes_match_union_find(spark):
     src = rng.integers(0, 60, 1200)
     dst = rng.integers(0, 60, 1200)
     edges = [(int(a), int(b)) for a, b in zip(src, dst) if a != b]
-    nodes = np.unique([x for e in edges for x in e])
-    labels = union_find_numpy(
-        np.array([e[0] for e in edges]), np.array([e[1] for e in edges]), nodes
-    )
+    nodes, labels = _expected_labels(edges)
     expected = {}
     for node, lab in zip(nodes, labels):
         expected.setdefault(int(lab), set()).add(int(node))

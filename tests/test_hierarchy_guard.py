@@ -202,15 +202,22 @@ def test_grid_memberships_cell_guard_raises_on_giant_component(spark):
 def test_grid_memberships_rejects_unknown_merge_endpoints(spark):
     """ADVICE r4: a merge edge referencing a record id absent from
     records must raise a loud ValueError, not index the C kernel out
-    of bounds."""
+    of bounds — on the membership route and the pair-sweep route."""
     from entityframe_spark.operators.hierarchy import memberships_for_grid
+    from entityframe_spark.operators.pair_sweep import pair_sweep_stats
 
     records = spark.range(10).select(F.col("id").alias("record_id"))
     me = spark.createDataFrame(
         [(500_000, 999, 0)], "threshold_fp long, child long, parent long"
     )
+    ok = spark.createDataFrame(
+        [(500_000, 1, 0)], "threshold_fp long, child long, parent long"
+    )
     with pytest.raises(Exception, match="absent from|no record rows"):
         memberships_for_grid(me, records, [400_000]).collect()
+    # the pair-sweep route maps endpoints on the driver: it raises at call time
+    with pytest.raises(ValueError, match="child record ids absent from records"):
+        pair_sweep_stats(records, ok, me, [400_000], [400_000])
 
 
 def _me_rows(df):

@@ -3,11 +3,11 @@
 Usage: python tools/make_pyfiles_zip.py [out.zip]
 
 Zips the pure-Python package (sources only — the native C kernels
-compile themselves on first use per worker, falling back to
-pure-Python batches with the same values on compiler-less executors;
-see functions/jw_native.py and functions/uf_native.py). The zip root contains the package dir, so
-`--py-files out.zip` makes `import entityframe_spark` work on driver
-and executors alike.
+compile themselves on first use per worker through the shared loader
+in functions/_native.py; a compiler-less executor warns once per
+kernel module and runs the pure-Python twins, with the same values).
+The zip root contains the package dir, so `--py-files out.zip` makes
+`import entityframe_spark` work on driver and executors alike.
 """
 
 from __future__ import annotations
