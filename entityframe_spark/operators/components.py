@@ -23,6 +23,8 @@ from __future__ import annotations
 
 import os
 import sys
+import threading
+import warnings
 
 import numpy as np
 import pandas as pd
@@ -51,6 +53,10 @@ def _ckpt_level(approx_rows: int) -> StorageLevel | None:
     return StorageLevel.DISK_ONLY if approx_rows > _DISK_LEVEL_ROWS else None
 
 
+_unpersist_warned = False
+_unpersist_lock = threading.Lock()
+
+
 def _ckpt_unpersist(df: DataFrame) -> None:
     """Release the persisted blocks of a localCheckpoint()ed DataFrame.
 
@@ -61,11 +67,28 @@ def _ckpt_unpersist(df: DataFrame) -> None:
     which races with RDDs persisted concurrently by other driver
     threads (ADVICE r4). Only safe once a downstream job has
     materialised whatever replaces ``df`` (localCheckpoint lineage is
-    truncated; the block is unrecoverable after unpersist)."""
+    truncated; the block is unrecoverable after unpersist).
+
+    The path is a private JVM API. When it drifts, this warns once per
+    process and the blocks stay until the context GC reclaims them;
+    ``tests/test_components.py::test_distributed_rounds_release_storage``
+    fails on the same drift."""
+    global _unpersist_warned
     try:
         df._jdf.queryExecution().analyzed().rdd().unpersist(False)
-    except Exception:
-        pass  # API drift: degrade to keep-until-context-GC
+    except Exception as exc:
+        with _unpersist_lock:
+            if _unpersist_warned:
+                return
+            _unpersist_warned = True
+        warnings.warn(
+            "cannot release a localCheckpoint through "
+            f"queryExecution().analyzed().rdd() ({type(exc).__name__}: "
+            f"{exc}); its blocks stay until the context GC reclaims them",
+            RuntimeWarning,
+            stacklevel=2,
+        )
+
 
 from entityframe_spark.functions import uf_native
 from entityframe_spark.functions._native import tune_allocator
@@ -133,6 +156,30 @@ def _signature(e: DataFrame) -> tuple[int, int]:
     return int(row["n"]), int(row["h"])
 
 
+def _gather(batches, cols: tuple[str, ...]) -> list[np.ndarray] | None:
+    """Executor-side input of one kernel call: the int64 columns
+    ``cols`` of every non-empty Arrow batch, accumulated as TYPED numpy
+    arrays (a pandas concat of a 50M-edge set copied ~1.6 GB of
+    object-dtype-prone frames) and concatenated only when more than
+    one batch arrived. None when the task saw no rows."""
+    parts: list[list[np.ndarray]] = [[] for _ in cols]
+    for b in batches:
+        if len(b):
+            for acc, c in zip(parts, cols):
+                acc.append(b[c].to_numpy(dtype=np.int64))
+    if not parts[0]:
+        return None
+    return [np.concatenate(p) if len(p) > 1 else p[0] for p in parts]
+
+
+def _yield_frames(cols: dict[str, np.ndarray]):
+    """Yield the equal-length arrays ``cols`` as pandas frames of at
+    most _YIELD_CHUNK rows."""
+    n = len(next(iter(cols.values())))
+    for i in range(0, n, _YIELD_CHUNK):
+        yield pd.DataFrame({k: v[i : i + _YIELD_CHUNK] for k, v in cols.items()})
+
+
 def _cc_single_task(e: DataFrame) -> DataFrame:
     """Small-graph fast path: exact union-find in ONE Arrow-batched task.
 
@@ -143,136 +190,106 @@ def _cc_single_task(e: DataFrame) -> DataFrame:
     """
 
     def run(batches):
-        us, vs = [], []
-        for pdf in batches:
-            if len(pdf):
-                us.append(pdf["u"].to_numpy(dtype=np.int64))
-                vs.append(pdf["v"].to_numpy(dtype=np.int64))
-        if not us:
-            return
-        nodes, comp = uf_native.components(
-            np.concatenate(us) if len(us) > 1 else us[0],
-            np.concatenate(vs) if len(vs) > 1 else vs[0],
-        )
-        for i in range(0, len(nodes), _YIELD_CHUNK):
-            yield pd.DataFrame(
-                {
-                    "node": nodes[i : i + _YIELD_CHUNK],
-                    "component": comp[i : i + _YIELD_CHUNK],
-                }
-            )
+        cols = _gather(batches, ("u", "v"))
+        if cols is not None:
+            nodes, comp = uf_native.components(*cols)
+            yield from _yield_frames({"node": nodes, "component": comp})
 
     return e.repartition(1).mapInPandas(run, schema="node long, component long")
 
 
-def _contract_partitions(e_uv: DataFrame, n_parts: int | None) -> DataFrame:
-    """One NARROW local-contraction pass: optionally coalesce to
-    ``n_parts`` (no shuffle), then replace every partition's edge set
-    with its star forest — one (root=min id, member) row per non-root
-    node of each in-task component, computed by the C union-find
-    kernel. Connectivity-preserving by construction (the star edges
-    connect exactly the node sets the input edges connected, within
-    each task; cross-task connectivity survives because shared nodes
-    carry their roots together downstream). Output per task is
-    ``distinct local nodes - local components`` rows, i.e. bounded by
-    NODE count however many parallel/duplicate edges arrive."""
-    if n_parts is not None:
-        cur_parts = e_uv.rdd.getNumPartitions()
-        if n_parts < cur_parts:
-            e_uv = e_uv.coalesce(n_parts)
-        elif n_parts > cur_parts:
-            # input partitioning coarser than the per-task memory
-            # bound allows: one shuffle to restore the bound
-            e_uv = e_uv.repartition(n_parts)
+def _contract_partitions(e_uv: DataFrame) -> DataFrame:
+    """One NARROW local-contraction pass (a ``_cascade`` kernel):
+    replace every partition's edge set with its star forest — one
+    (root=min id, member) row per non-root node of each in-task
+    component, computed by the C union-find kernel.
+    Connectivity-preserving by construction (the star edges connect
+    exactly the node sets the input edges connected, within each task;
+    cross-task connectivity survives because shared nodes carry their
+    roots together downstream). Output per task is ``distinct local
+    nodes - local components`` rows, i.e. bounded by NODE count however
+    many parallel/duplicate edges arrive."""
 
     def contract(batches):
-        srcs, dsts = [], []
-        for pdf in batches:
-            if len(pdf):
-                srcs.append(pdf["u"].to_numpy(dtype=np.int64))
-                dsts.append(pdf["v"].to_numpy(dtype=np.int64))
-        if not srcs:
-            return
-        src = np.concatenate(srcs) if len(srcs) > 1 else srcs[0]
-        dst = np.concatenate(dsts) if len(dsts) > 1 else dsts[0]
-        nodes, comp = uf_native.components(src, dst)
-        mask = comp != nodes
-        roots, members = comp[mask], nodes[mask]
-        for i in range(0, len(members), _YIELD_CHUNK):
-            yield pd.DataFrame(
-                {"u": roots[i : i + _YIELD_CHUNK], "v": members[i : i + _YIELD_CHUNK]}
-            )
+        cols = _gather(batches, ("u", "v"))
+        if cols is not None:
+            nodes, comp = uf_native.components(*cols)
+            mask = comp != nodes
+            yield from _yield_frames({"u": comp[mask], "v": nodes[mask]})
 
     return e_uv.mapInPandas(contract, schema="u long, v long")
 
 
-def _contract_cascade(
-    e_uv: DataFrame, n_raw: int, local_threshold: int, max_passes: int = 8
+def _to_parts(df: DataFrame, n_parts: int) -> DataFrame:
+    """``df`` over ``n_parts`` partitions: coalesce down (no shuffle),
+    or one repartition shuffle up when the input partitioning is
+    coarser than the per-task memory bound allows."""
+    cur = df.rdd.getNumPartitions()
+    if n_parts < cur:
+        return df.coalesce(n_parts)
+    if n_parts > cur:
+        return df.repartition(n_parts)
+    return df
+
+
+def _cascade(
+    e: DataFrame,
+    n_raw: int,
+    local_threshold: int,
+    run_pass,
+    label: str,
+    max_passes: int = 8,
 ) -> tuple[DataFrame, int, DataFrame]:
-    """Contraction cascade: repeated narrow passes of
-    ``_contract_partitions``, coalescing ~4x fewer partitions each
-    time, until the surviving star forest fits ONE exact kernel task
-    (<= local_threshold rows) or the partition count can no longer
-    drop. Edge count converges toward (nodes - components) — a
-    function of NODE count, so graphs whose edge multiplicity (not
-    node count) pushed them past the single-task bound collapse back
-    under it without any distributed rounds. Partition count is
-    floored at ceil(rows / local_threshold) so no task ever receives
-    more than the single-task memory bound.
+    """Shrink an above-bound edge set with repeated narrow passes of
+    ``run_pass`` until it fits ONE exact kernel task (<= local_threshold
+    rows) or the partition count can no longer drop. ``run_pass`` bounds
+    each task's output by its distinct node count:
+    ``_contract_partitions`` (star contraction, for components) or
+    ``hierarchy._msf_filter_pass`` (max-spanning-forest filter, for the
+    merge hierarchy). So the row count converges toward a function of
+    NODE count, and graphs whose edge multiplicity pushed them past the
+    bound collapse back under it.
 
-    The stall test is on PARTITION count, not row count: with P
-    partitions the pass emits sum_p(local_nodes_p - local_comps_p), so
-    a node in k tasks contributes up to k rows. As P drops, cross-task
-    multiplicity falls but local components merge (fewer roots -> MORE
-    member rows), so the row count is not monotone on tree-ish graphs
-    even while it converges to n - c at P=1 (r4 bug: an n_star>=n_prev
-    break here sent the 10M-chain giant envelope back to ~25
-    alternating-star rounds). Re-contracting an UNCHANGED partitioning
-    is idempotent — shrink only ever comes from coalescing — so "parts
-    can't decrease" is the exact stall condition: it means node count
-    itself exceeds the single-task bound (the true cluster-scale case)
-    and the distributed rounds take over. Passes are bounded by
-    log4(initial partitions) regardless of max_passes.
+    The first pass goes STRAIGHT to the floor ceil(E / local_threshold):
+    with shuffle-random rows a partition of E/P edges emits ~E/P rows
+    until P is small enough that a task sees much of each component
+    (10M-node/50M-edge chain: natural-64 and /4-coalesced-16 passes each
+    streamed all 50M rows and shrank them by <1%). Later passes coalesce
+    ~4x fewer partitions, floored at ceil(rows / local_threshold).
 
-    Returns (star_edges, row_count, persisted_handle) — caller must
-    unpersist the handle once the result is consumed/materialised."""
+    The stall test is on PARTITION count, not row count: rows are not
+    monotone on tree-ish graphs as P drops (an n_rows >= n_prev break
+    sent the 10M-chain giant envelope back to ~25 alternating-star
+    rounds), while re-running a pass on an UNCHANGED partitioning is
+    idempotent — so "parts can't drop" means node count itself exceeds
+    the bound and the caller's distributed route takes over.
+
+    Each pass persists DISK_ONLY (streamed twice, count + next pass;
+    on-heap copies of 40M+ rows OOMed the local-mode heap) and releases
+    the previous one; ``EF_CC_LOG`` prints one ``[label]`` line per
+    pass. Returns (edges, rows, persisted_handle); the caller
+    unpersists the handle once the result is materialised."""
     log = os.environ.get("EF_CC_LOG", "") not in ("", "0")
-    cur, cached = e_uv, None
-    # First pass goes STRAIGHT to the floor partition count (the
-    # per-task memory bound), not the input's natural partitioning:
-    # with shuffle-random row placement a partition of E/P edges over
-    # ~min(2E/P, N) nodes emits ~E/P star rows — no shrink — until P
-    # is small enough that a task sees a meaningful fraction of each
-    # component. Measured (10M-node/50M-edge chain graph, local[32]):
-    # the natural-64 and /4-coalesced-16 passes each streamed the full
-    # 50M rows through Python workers and shrank them by <1%; starting
-    # at ceil(E/threshold)=3 removes both. On a real cluster the floor
-    # is E/threshold tasks — ample parallelism at any scale that
-    # needs the cascade at all (50M-edge graphs -> 3 tasks is the
-    # parallelism-starved WORST case, and it is also the fastest).
-    n_star, parts = n_raw, max(1, -(-n_raw // local_threshold))
+    cur, cached = e, None
+    n_rows, parts = n_raw, max(1, -(-n_raw // local_threshold))
     for i in range(max_passes):
-        # DISK_ONLY: a pass cache is streamed exactly twice (count +
-        # next pass); on-heap copies of 40M+ rows OOMed the shared
-        # local-mode heap
-        nxt = _contract_partitions(cur, parts).persist(StorageLevel.DISK_ONLY)
-        n_star = nxt.count()
+        nxt = run_pass(_to_parts(cur, parts)).persist(StorageLevel.DISK_ONLY)
+        n_rows = nxt.count()
         if cached is not None:
             cached.unpersist()
         cur = cached = nxt
         cur_parts = cur.rdd.getNumPartitions()
         if log:
             print(
-                f"[ef-cc] cascade pass {i}: rows={n_star} parts={cur_parts}",
+                f"[{label}] cascade pass {i}: rows={n_rows} parts={cur_parts}",
                 file=sys.stderr,
             )
-        if n_star <= local_threshold or n_star == 0:
-            return cur, n_star, cached
-        floor_parts = -(-n_star // local_threshold)
-        parts = max(floor_parts, cur_parts // 4)
+        if n_rows <= local_threshold:
+            break
+        parts = max(-(-n_rows // local_threshold), cur_parts // 4)
         if parts >= cur_parts:
             break  # can't coalesce further: node count itself above the bound
-    return cur, n_star, cached
+    return cur, n_rows, cached
 
 
 def connected_components(
@@ -317,23 +334,18 @@ def connected_components(
             return _cc_single_task(
                 sel.select(F.col("src").alias("u"), F.col("dst").alias("v"))
             ).localCheckpoint(eager=True, storageLevel=_ckpt_level(n_raw))
-        # above the single-task bound: contraction cascade first. A few
-        # narrow kernel passes shrink the edge set toward NODE count;
-        # if the remainder fits one task the exact kernel finishes
-        # (measured: the 10M-record/50M-edge giant-component envelope
-        # ran ~25 alternating-star rounds = 690s before this path), and
-        # only a cascade that stalls above the bound — node count
-        # itself beyond one task's memory, the true cluster-scale case
-        # — pays for the distributed rounds, now over the contracted
-        # (smaller, star-shaped, low-diameter) edge set.
-        star, n_star, star_cache = _contract_cascade(
+        # above the single-task bound: contraction cascade first, so
+        # only a cascade that stalls — node count itself beyond one
+        # task — pays for the distributed rounds, over the contracted
+        # star forest (the 10M-record/50M-edge giant envelope ran ~25
+        # alternating-star rounds = 690s before this path)
+        star, n_star, star_cache = _cascade(
             sel.select(F.col("src").alias("u"), F.col("dst").alias("v")),
             n_raw,
             local_threshold,
+            _contract_partitions,
+            "ef-cc",
         )
-        if n_star == 0:
-            star_cache.unpersist()
-            return sel.sparkSession.createDataFrame([], "node long, component long")
         if n_star <= local_threshold:
             out = _cc_single_task(star).localCheckpoint(
                 eager=True, storageLevel=_ckpt_level(n_star)

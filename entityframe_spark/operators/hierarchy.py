@@ -18,20 +18,26 @@ min record id, so representatives are deterministic). Properties:
   ``merge_edges.filter(threshold_fp >= t_fp)`` over all record ids
   (isolates = singletons), labeled by min id.
 
-Build strategy (one global shuffle + Arrow-batched local work):
-1. global connected components over ALL edges (the t=0 partition);
-   every later computation is independent per component;
-2. component-partitioned local single-linkage sweep — hash-shuffle on
-   component, ONE union-find kernel run per ~5M-edge partition
-   (mapInPandas; components never interact, so batching whole
-   components per task is semantics-free) — exact reference semantics
-   (descending thresholds, n-way merges at equal threshold,
-   union-by-min) with zero global iteration.
+Build strategy (``build_merge_edges``), by raw edge count E against
+the per-task bound ``local_threshold``:
+1. fused — E within the bound (and within ``max_component_edges``):
+   the whole sweep is ONE union-find kernel task;
+2. CC-partitioned — ``local_threshold=0`` or ``on_oversized="raise"``:
+   global connected components (the t=0 partition), a component tag
+   join, then a component-partitioned sweep — hash-shuffle on
+   component, ONE kernel run per ~5M-edge partition (components never
+   interact, so batching whole components per task is
+   semantics-free) — with zero global iteration;
+3. filter cascade — every other above-bound build: per-partition
+   max-spanning-forest passes shrink the edge set toward its forest
+   (<= n-1 rows) without changing a merge event, then the fused sweep
+   runs over the forest, or route 2 when the forest itself exceeds
+   the bound.
+Every route keeps exact reference semantics (descending thresholds,
+n-way merges at equal threshold, union-by-min).
 
-This is the reference's own designed "blocked parallel hierarchies"
-(docs/design/algorithms.md:789-799) expressed in Spark. Skewed/giant
-components would serialize into one task; blocking upstream keeps
-components small, and `max_component_edges` guards surprises.
+Route 2 is the reference's own designed "blocked parallel hierarchies"
+(docs/design/algorithms.md:789-799) expressed in Spark.
 """
 
 from __future__ import annotations
@@ -43,7 +49,14 @@ from pyspark.sql import functions as F
 
 from entityframe_spark.functions import uf_native
 from entityframe_spark.functions._native import tune_allocator
-from entityframe_spark.operators.components import _YIELD_CHUNK, connected_components
+from entityframe_spark.operators.components import (
+    _YIELD_CHUNK,
+    _cascade,
+    _ckpt_level,
+    _gather,
+    _yield_frames,
+    connected_components,
+)
 
 # fire in every pyspark worker at closure-deserialize time, BEFORE the
 # first Arrow batch is materialised: the multi-hundred-MB single-task
@@ -52,6 +65,11 @@ from entityframe_spark.operators.components import _YIELD_CHUNK, connected_compo
 tune_allocator()
 
 MERGE_EDGE_SCHEMA = "threshold_fp long, child long, parent long"
+MERGE_EDGE_SIZED_SCHEMA = (
+    "threshold_fp long, child long, parent long, left_size long, right_size long"
+)
+# column order of uf_native.single_linkage's five arrays
+_SIZED_COLS = ("threshold_fp", "child", "parent", "left_size", "right_size")
 
 
 def _sweep_arrays(pdf: pd.DataFrame):
@@ -76,9 +94,7 @@ def _sweep_arrays(pdf: pd.DataFrame):
     argsort passes + 3 full-size takes in the single Python task
     (measured 10M-node/50M-edge giant component: lexsort 119s +
     take 67s of a ~260s in-process sweep)."""
-    src = pdf["src"].to_numpy(dtype=np.int64)
-    dst = pdf["dst"].to_numpy(dtype=np.int64)
-    wfp = pdf["w_fp"].to_numpy(dtype=np.int64)
+    src, dst, wfp = (pdf[c].to_numpy(dtype=np.int64) for c in ("src", "dst", "w_fp"))
     # lexsort: last key is primary -> (-w_fp, src, dst) total order
     order = np.lexsort((dst, src, -wfp))
     return uf_native.single_linkage(src[order], dst[order], wfp[order])
@@ -87,13 +103,7 @@ def _sweep_arrays(pdf: pd.DataFrame):
 def _local_single_linkage(pdf: pd.DataFrame) -> pd.DataFrame:
     """Union-find sweep over one component's edges, descending
     threshold, emitting merge edges (child -> parent=min)."""
-    t, c, p, _, _ = _sweep_arrays(pdf)
-    return pd.DataFrame({"threshold_fp": t, "child": c, "parent": p})
-
-
-MERGE_EDGE_SIZED_SCHEMA = (
-    "threshold_fp long, child long, parent long, left_size long, right_size long"
-)
+    return pd.DataFrame(dict(zip(_SIZED_COLS[:3], _sweep_arrays(pdf))))
 
 
 def _local_single_linkage_sized(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -101,147 +111,41 @@ def _local_single_linkage_sized(pdf: pd.DataFrame) -> pd.DataFrame:
     clusters being merged (parent-rooted = left, child-rooted = right)
     — the inputs for merge criticality |E_l| x |E_r| and information
     content (principles.md:336-338, 368-372)."""
-    t, c, p, ls, rs = _sweep_arrays(pdf)
-    return pd.DataFrame(
-        {
-            "threshold_fp": t,
-            "child": c,
-            "parent": p,
-            "left_size": ls,
-            "right_size": rs,
-        }
-    )
+    return pd.DataFrame(dict(zip(_SIZED_COLS, _sweep_arrays(pdf))))
 
 
 def _sweep_run(batches, sized: bool):
     """Executor-side sweep body shared by the fused and partitioned
-    paths: accumulate TYPED numpy columns per Arrow batch (a pandas
-    concat of the full edge set copied ~1.6 GB of object-dtype-prone
-    frames at 50M edges), one kernel call, chunked output yields
-    (same _YIELD_CHUNK batching as components.py — one whole-result
-    Arrow batch was a 200-300 MB contiguous allocation). Rows arrive
-    already in (-w_fp, src, dst) order (JVM sortWithinPartitions at
-    both call sites) — Arrow batch iteration preserves partition
-    order, so the kernel consumes them directly."""
-    srcs, dsts, ws = [], [], []
-    for b in batches:
-        if len(b):
-            srcs.append(b["src"].to_numpy(dtype=np.int64))
-            dsts.append(b["dst"].to_numpy(dtype=np.int64))
-            ws.append(b["w_fp"].to_numpy(dtype=np.int64))
-    if not srcs:
-        return
-    t, c, p, ls, rs = uf_native.single_linkage(
-        np.concatenate(srcs) if len(srcs) > 1 else srcs[0],
-        np.concatenate(dsts) if len(dsts) > 1 else dsts[0],
-        np.concatenate(ws) if len(ws) > 1 else ws[0],
-    )
-    for i in range(0, len(t), _YIELD_CHUNK):
-        cols = {
-            "threshold_fp": t[i : i + _YIELD_CHUNK],
-            "child": c[i : i + _YIELD_CHUNK],
-            "parent": p[i : i + _YIELD_CHUNK],
-        }
-        if sized:
-            cols["left_size"] = ls[i : i + _YIELD_CHUNK]
-            cols["right_size"] = rs[i : i + _YIELD_CHUNK]
-        yield pd.DataFrame(cols)
+    paths: one kernel call over the gathered columns, chunked output.
+    Rows arrive already in (-w_fp, src, dst) order (JVM
+    sortWithinPartitions at both call sites) — Arrow batch iteration
+    preserves partition order, so the kernel consumes them directly."""
+    cols = _gather(batches, ("src", "dst", "w_fp"))
+    if cols is not None:
+        arrays = uf_native.single_linkage(*cols)
+        yield from _yield_frames(dict(zip(_SIZED_COLS[: 5 if sized else 3], arrays)))
 
 
-def _msf_filter_pass(e: DataFrame, n_parts: int | None) -> DataFrame:
-    """One Kruskal-filter pass: partition to ``n_parts`` (coalesce
-    down / repartition up, same rules as components._contract_
-    partitions), JVM-sort each partition into the canonical
-    (-w_fp, src, dst) order, and keep only each partition's canonical
-    max-spanning-forest edges. Edges dropped here are provably
+def _msf_filter_pass(e: DataFrame) -> DataFrame:
+    """One Kruskal-filter pass (a ``components._cascade`` kernel):
+    JVM-sort each partition into the canonical (-w_fp, src, dst) order
+    and keep its canonical max-spanning-forest edges. A dropped edge is
     non-forest in ANY superset (MapReduce MST filtering, Lattanzi et
-    al. SPAA'11), so repeated passes are exact; output per task is
+    al. SPAA'11) — a no-op union in the sweep — so repeated passes keep
+    every merge event exact, for any edge set. Output per task is
     bounded by its distinct node count - 1."""
-    if n_parts is not None:
-        cur = e.rdd.getNumPartitions()
-        if n_parts < cur:
-            e = e.coalesce(n_parts)
-        elif n_parts > cur:
-            e = e.repartition(n_parts)
 
     def keep(batches):
-        srcs, dsts, ws = [], [], []
-        for b in batches:
-            if len(b):
-                srcs.append(b["src"].to_numpy(dtype=np.int64))
-                dsts.append(b["dst"].to_numpy(dtype=np.int64))
-                ws.append(b["w_fp"].to_numpy(dtype=np.int64))
-        if not srcs:
-            return
-        src = np.concatenate(srcs) if len(srcs) > 1 else srcs[0]
-        dst = np.concatenate(dsts) if len(dsts) > 1 else dsts[0]
-        wfp = np.concatenate(ws) if len(ws) > 1 else ws[0]
-        m = uf_native.msf_mask(src, dst)
-        src, dst, wfp = src[m], dst[m], wfp[m]
-        for i in range(0, len(src), _YIELD_CHUNK):
-            yield pd.DataFrame(
-                {
-                    "src": src[i : i + _YIELD_CHUNK],
-                    "dst": dst[i : i + _YIELD_CHUNK],
-                    "w_fp": wfp[i : i + _YIELD_CHUNK],
-                }
-            )
+        cols = _gather(batches, ("src", "dst", "w_fp"))
+        if cols is not None:
+            src, dst, wfp = cols
+            m = uf_native.msf_mask(src, dst)
+            yield from _yield_frames({"src": src[m], "dst": dst[m], "w_fp": wfp[m]})
 
     return (
         e.sortWithinPartitions(F.desc("w_fp"), "src", "dst")
         .mapInPandas(keep, schema="src long, dst long, w_fp long")
     )
-
-
-def _msf_filter_cascade(
-    edges_fp: DataFrame, n_raw: int, local_threshold: int, max_passes: int = 8
-) -> tuple[DataFrame, int, DataFrame]:
-    """Kruskal-filter cascade: shrink an above-threshold edge set
-    toward its max-spanning forest (<= node count - 1 rows) with
-    per-partition filter passes, so the FULL dendrogram sweep fits one
-    exact kernel task. Merge events over the filtered set are
-    IDENTICAL to the full set's: every dropped edge would have been a
-    no-op union in the sweep (its endpoints connect via
-    strictly-earlier canonical-order edges that survive filtering).
-
-    This replaces, for trusted (max_component_edges=None) inputs, the
-    whole CC + tag-join + component-shuffle decomposition: those jobs
-    existed only to bound per-task edge counts, which the filter does
-    directly. Partition schedule mirrors components._contract_cascade
-    (start at the memory-bound floor ceil(E/threshold), /4 after;
-    stall = parts cannot drop, meaning forest size itself exceeds one
-    task's bound — the caller then falls back to the CC route over
-    the filtered, smaller edge set).
-
-    Returns (filtered_edges, row_count, persisted_handle); caller
-    unpersists the handle after materialising downstream."""
-    import os as _os
-    import sys as _sys
-
-    from pyspark import StorageLevel
-
-    log = _os.environ.get("EF_CC_LOG", "") not in ("", "0")
-    cur, cached = edges_fp.select("src", "dst", "w_fp"), None
-    n_rows, parts = n_raw, max(1, -(-n_raw // local_threshold))
-    for i in range(max_passes):
-        nxt = _msf_filter_pass(cur, parts).persist(StorageLevel.DISK_ONLY)
-        n_rows = nxt.count()
-        if cached is not None:
-            cached.unpersist()
-        cur = cached = nxt
-        cur_parts = cur.rdd.getNumPartitions()
-        if log:
-            print(
-                f"[ef-msf] filter pass {i}: rows={n_rows} parts={cur_parts}",
-                file=_sys.stderr,
-            )
-        if n_rows <= local_threshold or n_rows == 0:
-            return cur, n_rows, cached
-        floor_parts = -(-n_rows // local_threshold)
-        parts = max(floor_parts, cur_parts // 4)
-        if parts >= cur_parts:
-            break
-    return cur, n_rows, cached
 
 
 def _sweep_fused_single_task(edges_fp: DataFrame, sized: bool, schema: str) -> DataFrame:
@@ -297,36 +201,6 @@ def _sweep_partitioned(
     )
 
 
-def _msf_route(
-    edges_fp: DataFrame, n_raw: int, local_threshold: int, sized: bool, schema: str
-) -> tuple[DataFrame | None, DataFrame, int]:
-    """Above-threshold routing via the Kruskal-filter cascade (trusted
-    inputs only — callers gate on max_component_edges is None, since
-    the filter bounds per-task memory by construction but cannot
-    observe raw per-component edge counts for the guard contract).
-
-    Returns (done_result | None, edges_fp, n_raw): a non-None first
-    element is the finished merge-edge DataFrame (forest fit one
-    task); otherwise the caller continues on the returned
-    filtered-and-checkpointed edge set (smaller, merge-event
-    identical)."""
-    from entityframe_spark.operators.components import _ckpt_level
-
-    filtered, n_f, handle = _msf_filter_cascade(edges_fp, n_raw, local_threshold)
-    if n_f <= local_threshold:
-        out = _sweep_fused_single_task(filtered, sized, schema).localCheckpoint(
-            eager=True, storageLevel=_ckpt_level(n_f)
-        )
-        handle.unpersist()
-        return out, edges_fp, n_raw
-    # forest itself above one task's bound (node count beyond the
-    # memory bound — true cluster-scale): distributed CC route, but
-    # over the filtered edge set
-    kept = filtered.localCheckpoint(eager=True, storageLevel=_ckpt_level(n_f))
-    handle.unpersist()
-    return None, kept, n_f
-
-
 def _build_merge_edges_impl(
     edges_fp: DataFrame,
     sized: bool,
@@ -346,105 +220,72 @@ def _build_merge_edges_impl(
         )
     schema = MERGE_EDGE_SIZED_SCHEMA if sized else MERGE_EDGE_SCHEMA
     n_raw = edges_fp.count()
-    if local_threshold:
-        if n_raw <= local_threshold and (
-            max_component_edges is None or n_raw <= max_component_edges
-        ):
-            return _sweep_fused_single_task(edges_fp, sized, schema)
-        if max_component_edges is None and n_raw > local_threshold:
-            # trusted input above the single-task bound: Kruskal-filter
-            # cascade (see _msf_filter_cascade) — the guard contract
-            # needs raw per-component counts, so guarded inputs keep
-            # the CC + hot-check route below
-            done, edges_fp, n_raw = _msf_route(
-                edges_fp, n_raw, local_threshold, sized, schema
+    if local_threshold and n_raw <= local_threshold and (
+        max_component_edges is None or n_raw <= max_component_edges
+    ):
+        # total edges <= cap implies every component is under the cap
+        return _sweep_fused_single_task(edges_fp, sized, schema)
+    # per-component edge bound checked before the partitioned sweep
+    check = max_component_edges if on_oversized == "raise" else None
+    if local_threshold and check is None:
+        forest, n_f, handle = _cascade(
+            edges_fp.select("src", "dst", "w_fp"),
+            n_raw,
+            local_threshold,
+            _msf_filter_pass,
+            "ef-msf",
+        )
+        if n_f <= local_threshold:
+            out = _sweep_fused_single_task(forest, sized, schema).localCheckpoint(
+                eager=True, storageLevel=_ckpt_level(n_f)
             )
-            if done is not None:
-                return done
+            handle.unpersist()
+            return out
+        # forest itself above one task's bound (node count beyond the
+        # memory bound — true cluster-scale): the CC-partitioned sweep
+        # over the filtered, merge-event-identical edge set
+        edges_fp = forest.localCheckpoint(eager=True, storageLevel=_ckpt_level(n_f))
+        handle.unpersist()
+        n_raw = n_f
+        if max_component_edges is not None:
+            check = local_threshold
     cc_kw = {} if cc_local_threshold is None else {"local_threshold": cc_local_threshold}
     comps = connected_components(edges_fp, "src", "dst", **cc_kw)
     tagged = edges_fp.join(
         comps.withColumnRenamed("node", "src").withColumnRenamed("component", "_comp"),
         "src",
     ).select("_comp", "src", "dst", "w_fp")
-    if max_component_edges is not None:
+    if check is not None:
         # DISK_ONLY past the small bound: n_raw tagged rows copied as
         # on-heap UnsafeRows (~100 B each) OOMed the 16g local-mode
         # heap at 45M edges (tools/envelope_bench.py clustered shape)
-        from entityframe_spark.operators.components import _ckpt_level
-
         tagged = tagged.localCheckpoint(eager=False, storageLevel=_ckpt_level(n_raw))
         hot = (
             tagged.groupBy("_comp")
             .agg(F.count(F.lit(1)).alias("_n"))
-            .where(F.col("_n") > int(max_component_edges))
+            .where(F.col("_n") > int(check))
             .orderBy(F.col("_n").desc())
-            .collect()
+            .first()
         )
-        if hot and on_oversized == "raise":
+        if hot is not None and on_oversized == "raise":
             raise ValueError(
-                f"component {hot[0]['_comp']} has {hot[0]['_n']} edges "
+                f"component {hot['_comp']} has {hot['_n']} edges "
                 f"(> max_component_edges={max_component_edges}); a giant "
                 "component would serialize into one task. Tighten blocking "
                 "upstream (smaller blocks / drop hot LSH bands), raise the "
                 "cap, pass on_oversized='filter' to route it through the "
                 "Kruskal-filter cascade, or max_component_edges=None to "
-                "force single-task processing."
+                "skip this check."
             )
-        if hot:
-            return _sweep_split_oversized(
-                tagged, hot, sized, schema, n_raw,
-                local_threshold or 20_000_000, edges_per_task,
+        if hot is not None:
+            raise ValueError(
+                f"component {hot['_comp']} still holds {hot['_n']} edges after "
+                "max-spanning-forest filtering — the component's NODE count "
+                "itself exceeds one task's memory bound "
+                f"({local_threshold} rows). Tighten blocking upstream; no "
+                "single-task sweep can absorb this component."
             )
     return _sweep_partitioned(tagged, sized, schema, n_raw, edges_per_task)
-
-
-def _sweep_split_oversized(
-    tagged: DataFrame,
-    hot: list,
-    sized: bool,
-    schema: str,
-    n_raw: int,
-    filter_threshold: int,
-    edges_per_task: int,
-) -> DataFrame:
-    """Guard-tripped giant components take the Kruskal-filter route
-    (VERDICT r4 Wrong #2): split the tagged edge set into the oversized
-    component(s) and the rest, shrink the oversized edges toward their
-    max-spanning forest — per-task memory bounded by construction, and
-    merge events over the filtered set are IDENTICAL to the full set's
-    (see _msf_filter_cascade) — then sweep the forest in one exact
-    kernel task and union with the partitioned sweep of the small
-    components. Components are disjoint, so the union is exact.
-
-    Raises only when even the filtered forest exceeds one task's bound
-    (node count of one component beyond the memory bound — the genuine
-    limit a single task cannot absorb)."""
-    from entityframe_spark.operators.components import _ckpt_level
-
-    hot_ids = [int(r["_comp"]) for r in hot]
-    giant_n = sum(int(r["_n"]) for r in hot)
-    giant = tagged.where(F.col("_comp").isin(hot_ids)).select("src", "dst", "w_fp")
-    small = tagged.where(~F.col("_comp").isin(hot_ids))
-
-    filtered, n_f, handle = _msf_filter_cascade(giant, giant_n, filter_threshold)
-    if n_f > filter_threshold:
-        handle.unpersist()
-        raise ValueError(
-            f"oversized component(s) {hot_ids} still hold {n_f} edges after "
-            "max-spanning-forest filtering — the component's NODE count "
-            "itself exceeds one task's memory bound "
-            f"({filter_threshold} rows). Tighten blocking upstream; no "
-            "single-task sweep can absorb this component."
-        )
-    giant_me = _sweep_fused_single_task(filtered, sized, schema).localCheckpoint(
-        eager=True, storageLevel=_ckpt_level(n_f)
-    )
-    handle.unpersist()
-    small_me = _sweep_partitioned(
-        small, sized, schema, max(n_raw - giant_n, 1), edges_per_task
-    )
-    return small_me.unionAll(giant_me)
 
 
 def build_merge_edges_sized(
@@ -457,8 +298,8 @@ def build_merge_edges_sized(
 ) -> DataFrame:
     """build_merge_edges variant carrying (left_size, right_size) per
     merge event — identical routing (shared _build_merge_edges_impl,
-    including the max_component_edges guard + oversized-component
-    filter route). ``cc_local_threshold`` (None = CC default) forwards
+    including the max_component_edges guard and the filter cascade).
+    ``cc_local_threshold`` (None = CC default) forwards
     to connected_components so benchmarks can force the distributed
     alternating-star path."""
     return _build_merge_edges_impl(
@@ -477,31 +318,26 @@ def build_merge_edges(
 ) -> DataFrame:
     """edges_fp(src long, dst long, w_fp long) -> merge_edges DataFrame.
 
-    Routing (same per-task memory bound as connected_components):
-    graphs up to ``local_threshold`` raw edges run the whole sweep in
-    ONE Arrow task (see _sweep_fused_single_task) — but only when the
-    ``max_component_edges`` guard provably cannot fire (total edges
-    <= cap implies every component is under the cap, so the guard
-    contract is preserved exactly). Larger graphs: one global CC + one
-    component-partitioned shuffle + ONE union-find kernel run per
-    ~``edges_per_task``-edge partition (see _sweep_partitioned).
+    Routing (module docstring; same per-task memory bound as
+    connected_components): up to ``local_threshold`` raw edges the
+    whole sweep is ONE Arrow task, when the ``max_component_edges``
+    guard provably cannot fire (total edges <= cap). Every other build
+    above the bound takes the Kruskal-filter cascade, then sweeps the
+    forest in one task, or — forest above the bound — by CC + one
+    component-partitioned kernel run per ~``edges_per_task`` edges
+    (_sweep_partitioned). ``local_threshold=0`` forces that
+    CC-partitioned sweep over the raw edges.
 
-    ``max_component_edges`` guards the skew failure mode: one giant
-    (near-global) component would funnel its whole edge set into a
-    single applyInPandas task and OOM the executor. The guard costs one
-    cheap count-per-component aggregation (same shuffle key as the
-    sweep); what happens next is ``on_oversized``:
+    ``max_component_edges`` guards the skew failure mode (one giant
+    component funnelled into a single task). ``on_oversized``:
 
-    - ``"filter"`` (default): route the oversized component(s) through
-      the Kruskal-filter cascade — per-task memory bounded by
-      construction, merge events identical (_sweep_split_oversized) —
-      and raise only if even the filtered forest exceeds one task.
-    - ``"raise"``: fail with guidance (the r3/r4 contract) for callers
-      that treat a giant component as an upstream blocking bug.
+    - ``"filter"`` (default): the filter cascade, raising only if a
+      component's forest still exceeds ``local_threshold``.
+    - ``"raise"``: the CC-partitioned route with one count per
+      component, failing with guidance (the r3/r4 contract) when one
+      exceeds the cap.
 
-    Pass max_component_edges=None to skip the check entirely (trusted
-    pre-blocked inputs; above local_threshold these take the filter
-    cascade up front without paying the CC + per-component count).
+    max_component_edges=None skips every per-component count.
     """
     return _build_merge_edges_impl(
         edges_fp, False, max_component_edges, local_threshold,

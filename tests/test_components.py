@@ -181,3 +181,26 @@ def test_distributed_rounds_do_not_touch_foreign_persists(spark):
     assert not missing, f"loop unpersisted foreign ids: {missing}"
     assert foreign.count() == 100
     foreign.unpersist()
+
+
+def test_ckpt_unpersist_warns_once_on_api_drift(monkeypatch):
+    """When the private queryExecution().analyzed().rdd() path drifts,
+    _ckpt_unpersist keeps the blocks and says so: one RuntimeWarning
+    per process, however many releases fail."""
+    import warnings
+
+    from entityframe_spark.operators import components
+
+    class Drifted:
+        @property
+        def _jdf(self):
+            raise AttributeError("analyzed")
+
+    monkeypatch.setattr(components, "_unpersist_warned", False)
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        components._ckpt_unpersist(Drifted())
+        components._ckpt_unpersist(Drifted())
+    drift = [w for w in caught if issubclass(w.category, RuntimeWarning)]
+    assert len(drift) == 1
+    assert "localCheckpoint" in str(drift[0].message)

@@ -1,13 +1,15 @@
 """Stage-level timing of the 10M/50M giant-component hierarchy build.
 
 The envelope (tools/envelope_bench.py) times build_merge_edges end to
-end; this splits the giant shape into its stages so optimisation work
-aims at the real bottleneck instead of a guess:
+end; this splits the giant shape into the stages of the route it takes
+under the default bounds (the max-spanning-forest filter cascade) so
+optimisation work aims at the real bottleneck instead of a guess:
 
-  1. connected_components (cascade route)    [materialised count]
-  2. tag join edges x components             [materialised count]
-  3. partitioned single-linkage sweep        [materialised count+hash]
-  4. in-process numpy floor: lexsort + C union-find kernel over the
+  1. filter cascade down to the max-spanning forest [materialised count]
+  2. single-linkage sweep over the forest: one fused task when the
+     forest fits the 20M-edge task bound, else connected_components +
+     tag join + partitioned sweep              [materialised count+hash]
+  3. in-process numpy floor: lexsort + C union-find kernel over the
      same 50M edges generated locally (what one perfect task costs)
 
 Usage: python tools/profile_giant.py [n_records] [n_edges]
@@ -34,39 +36,42 @@ def main() -> None:
     cpus = int(os.environ.get("PROFILE_CPUS", "32"))
 
     from entityframe_spark.session import get_spark
-    from entityframe_spark.operators.components import connected_components, _ckpt_level
+    from entityframe_spark.operators.components import (
+        _cascade,
+        _ckpt_level,
+        connected_components,
+    )
     from entityframe_spark.operators import hierarchy as H
 
+    bound = 20_000_000  # build_merge_edges' default local_threshold
     spark = get_spark(app_name="profile-giant", cores=cpus, shuffle_partitions=2 * cpus)
     edges = giant_edges(spark, n_records, n_edges).localCheckpoint(eager=True)
     n_raw = edges.count()
     print(f"edges materialised: {n_raw}", flush=True)
 
     t0 = time.time()
-    comps = connected_components(edges, "src", "dst")
-    n_comp_rows = comps.count()
-    t_cc = time.time() - t0
-    print(f"STAGE cc: {t_cc:.1f}s rows={n_comp_rows}", flush=True)
+    forest, n_f, handle = _cascade(edges, n_raw, bound, H._msf_filter_pass, "ef-msf")
+    t_cascade = time.time() - t0
+    print(f"STAGE cascade: {t_cascade:.1f}s forest={n_f}", flush=True)
 
     t0 = time.time()
-    tagged = edges.join(
-        comps.withColumnRenamed("node", "src").withColumnRenamed("component", "_comp"),
-        "src",
-    ).select("_comp", "src", "dst", "w_fp").localCheckpoint(
-        eager=True, storageLevel=_ckpt_level(n_raw)
-    )
-    t_tag = time.time() - t0
-    print(f"STAGE tag-join: {t_tag:.1f}s", flush=True)
-
-    t0 = time.time()
-    me = H._sweep_partitioned(
-        tagged, H._local_single_linkage, H.MERGE_EDGE_SCHEMA, n_raw, 5_000_000
-    )
+    if n_f <= bound:
+        me = H._sweep_fused_single_task(forest, False, H.MERGE_EDGE_SCHEMA)
+    else:
+        comps = connected_components(forest, "src", "dst")
+        tagged = forest.join(
+            comps.withColumnRenamed("node", "src").withColumnRenamed("component", "_comp"),
+            "src",
+        ).select("_comp", "src", "dst", "w_fp").localCheckpoint(
+            eager=True, storageLevel=_ckpt_level(n_f)
+        )
+        me = H._sweep_partitioned(tagged, False, H.MERGE_EDGE_SCHEMA, n_f, 5_000_000)
     row = me.agg(
         F.count(F.lit(1)).alias("n"),
         F.sum(F.xxhash64("threshold_fp", "child", "parent").cast("decimal(38,0)")).alias("h"),
     ).collect()[0]
     t_sweep = time.time() - t0
+    handle.unpersist()
     print(f"STAGE sweep: {t_sweep:.1f}s merges={int(row['n'])}", flush=True)
 
     # in-process floor: same graph shape, pure numpy + kernel
